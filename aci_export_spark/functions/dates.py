@@ -7,8 +7,18 @@ both endpoints inclusive, NULL end-date = open interval
 
 from __future__ import annotations
 
+from datetime import datetime, timezone
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+
+def utc_today() -> str:
+    """Today's UTC date as an ISO string. A sync run resolves it once at its
+    start and passes it down, so every plan of the run (and every cached
+    block recomputed after eviction) filters on the same day, even across
+    midnight."""
+    return datetime.now(timezone.utc).date().isoformat()
 
 
 def epoch_to_date(epoch_seconds: Column) -> Column:

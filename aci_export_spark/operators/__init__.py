@@ -12,7 +12,7 @@ from aci_export_spark.operators.dedup import (
     priority_dedup,
 )
 from aci_export_spark.operators.joins import scoped_semi_join, coalesce_key_join
-from aci_export_spark.operators.mirror import upsert, retain, mirror_sync, SyncStats
+from aci_export_spark.operators.mirror import upsert, retain, mirror_sync
 
 __all__ = [
     "dedupe_keep_min",
@@ -23,5 +23,4 @@ __all__ = [
     "upsert",
     "retain",
     "mirror_sync",
-    "SyncStats",
 ]

@@ -10,36 +10,25 @@ Spark-first equivalents, as pure DataFrame algebra so they work on any sink:
 
     upsert(target, source, keys)  = source ∪ (target ⟕̸ source)      (anti-join)
     retain(target, keep, keys)    = target ⋉ keep                    (semi-join)
-    mirror_sync                   = upsert ∘ retain, with SyncStats
+    mirror_sync                   = upsert ∘ retain
 
-On a transactional table format (Delta/Iceberg) the same semantics are a
-single `MERGE INTO … WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT / WHEN NOT
-MATCHED BY SOURCE DELETE`; these functions compute the post-state and the
-stats, and `write_mirror` materializes it (overwrite-diff mode for plain
-parquet). At 100 TB the anti/semi joins shuffle on the mirror key — the same
-key the table should be bucketed by, making them co-located joins.
+`mirror_sync_observed` computes the same post-state with the reference's
+per-entity stats {upserted, deleted} attached, counted by the one job that
+writes it (`sync/app_sync.run_mirror_sync_and_write` overwrites a plain
+parquet mirror with it). On a transactional table format (Delta/Iceberg) the
+same semantics are a single `MERGE INTO … WHEN MATCHED UPDATE / WHEN NOT
+MATCHED INSERT / WHEN NOT MATCHED BY SOURCE DELETE` (`delta_mirror_sync`).
+At 100 TB the anti/semi joins shuffle on the mirror key — the same key the
+table should be bucketed by (`write_bucketed_mirror`), making them
+co-located joins.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-@dataclass
-class SyncStats:
-    """Per-entity mirror stats (reference `sync-app/src/sync.rs:11-28`:
-    {upserted, deleted, duration})."""
-
-    upserted: int
-    deleted: int
-    duration_s: float = 0.0
-
-    def as_dict(self) -> dict:
-        return {"upserted": self.upserted, "deleted": self.deleted, "duration_s": round(self.duration_s, 3)}
 
 
 def upsert(target: DataFrame, source: DataFrame, keys: Sequence[str]) -> DataFrame:
@@ -67,32 +56,6 @@ def mirror_sync(target: DataFrame, source: DataFrame, keys: Sequence[str]) -> Da
     """Full mirror semantics: after this, target ≡ source keyset with source
     values (upsert + retain composed; reference §3.2 steps 5-6)."""
     return retain(upsert(target, source, keys), source, keys)
-
-
-def mirror_stats(target: DataFrame, source: DataFrame, keys: Sequence[str]) -> SyncStats:
-    """Counts the reference logs per entity (`sync-app/src/sync.rs:621-637`):
-    upserted = |source| (every source row is written), deleted = target keys
-    absent from source. Computed as one aggregate each — no collect loops.
-    """
-    upserted = source.count()
-    deleted = (
-        target.select(*keys).distinct()
-        .join(source.select(*keys).distinct(), on=list(keys), how="left_anti")
-        .count()
-    )
-    return SyncStats(upserted=upserted, deleted=deleted)
-
-
-def write_mirror(df: DataFrame, path: str, keys: Sequence[str], num_buckets: int | None = None) -> None:
-    """Materialize the mirror post-state (plain-parquet overwrite-diff mode).
-
-    On Delta this would be `MERGE INTO`; for plain files, overwrite. For the
-    bucketed layout that makes subsequent syncs' anti/semi joins co-located,
-    use :func:`write_bucketed_mirror` (bucketBy needs a table catalog entry,
-    so it takes a table name rather than a bare path).
-    """
-    writer = df.write.mode("overwrite")
-    writer.parquet(path)
 
 
 def write_bucketed_mirror(
@@ -267,8 +230,10 @@ def mirror_sync_observed(
     target: DataFrame, source: DataFrame, keys: Sequence[str]
 ) -> tuple[DataFrame, "Observation"]:
     """mirror_sync with stats attached via ``Observation`` — the counts the
-    reference logs (A9) come FREE with the materializing action instead of
-    two extra count() jobs over the same inputs.
+    reference logs (A9, `sync-app/src/sync.rs:621-637`: upserted = |source|,
+    deleted = target keys absent from source) come FREE with the
+    materializing action instead of two extra count() jobs over the same
+    inputs.
 
     The post-state = deleted-target-rows ∪ source, tagged; observe() sums
     the tags during whatever action materializes the frame (the mirror

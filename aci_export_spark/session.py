@@ -19,8 +19,9 @@ matter at 100 TB:
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -86,3 +87,14 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def persisted(df: DataFrame):
+    """`df` persisted for the block and released when it exits, also on an
+    exception: a run's shared intermediate never outlives the run."""
+    df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()

@@ -3,7 +3,15 @@
 Extract = the query library (lazy scans); transform = consolidation joins;
 load = mirror upsert in FK-safe order; GC = retain in reverse-dependency
 order (reference sync-app/src/sync.rs:469-637). Each target table's write is
-one DataFrame plan; stats per entity mirror the reference's SyncStats.
+one job that also yields its stats (`operators/mirror.mirror_sync_observed`);
+stats per entity mirror the reference's {upserted, deleted, duration}.
+
+One extract per run, like the reference: `run_mirror_sync_and_write` builds
+the unscoped `members()` frame once and persists it, then derives the `users`
+consolidation from it and persists that too. The person-keyed sources
+(`users`, `members`, `addresses`, `brns`) all read these two cached frames, so
+the members pipeline runs once per run instead of once per consumer. Both are
+released when the run ends, also when it fails.
 
 Target tables are plain-parquet mirrors here (a Delta/Iceberg deployment
 would use MERGE INTO with identical semantics — operators/mirror.py). The
@@ -13,25 +21,29 @@ synthetic id (db/src/user.rs:31-35) via `id_for_email`.
 
 from __future__ import annotations
 
+import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from aci_export_spark.functions.dates import utc_today
 from aci_export_spark.functions.ids import id_for_email
-from aci_export_spark.operators.mirror import mirror_stats, mirror_sync
+from aci_export_spark.operators import mirror as mirror_ops
 from aci_export_spark.queries import members as M
 from aci_export_spark.queries import leadership as L
 from aci_export_spark.queries import entities as E
+from aci_export_spark.session import persisted
 
 #: FK-safe load order and its reverse for GC (sync.rs:527-537, 592-616).
 LOAD_ORDER = ("regions", "clubs", "users", "members", "addresses", "brns", "leadership_club")
 
 
-def extract_users(tables: dict[str, DataFrame], today: str | None = None) -> DataFrame:
+def extract_users(tables: dict[str, DataFrame], mem: DataFrame) -> DataFrame:
     """users := member primaries ∪ partners ∪ leadership persons, distinct by
-    uid (A5/U2, sync.rs:497-514) — one unionByName + dropDuplicates plan."""
-    mem = M.members(tables, today=today)
+    uid (A5/U2, sync.rs:497-514) — one unionByName + dropDuplicates plan over
+    the run's unscoped `members()` frame `mem`."""
     primaries = mem.select(
         F.col("user_id").alias("uid"), F.col("email"),
         F.col("first_name"), F.col("last_name"),
@@ -70,12 +82,11 @@ def extract_users(tables: dict[str, DataFrame], today: str | None = None) -> Dat
     )
 
 
-def target_members(tables: dict[str, DataFrame], today: str | None = None) -> DataFrame:
-    """db-side member rows: person keys become email hashes; intraclub
-    collapses into regular (ddb/src/members.rs:759-766)."""
-    mem = M.members(tables, today=today).filter(
-        F.col("email").isNotNull() & (F.trim(F.col("email")) != "")
-    )
+def target_members(mem: DataFrame) -> DataFrame:
+    """db-side member rows of the run's unscoped `members()` frame `mem`:
+    person keys become email hashes; intraclub collapses into regular
+    (ddb/src/members.rs:759-766)."""
+    mem = mem.filter(F.col("email").isNotNull() & (F.trim(F.col("email")) != ""))
     member_type = F.when(F.col("member_type") == "intraclub", "regular").otherwise(
         F.col("member_type")
     )
@@ -97,12 +108,13 @@ def target_members(tables: dict[str, DataFrame], today: str | None = None) -> Da
 
 
 def _build_sources(
-    tables: dict[str, DataFrame], today: str | None = None
+    tables: dict[str, DataFrame], mem: DataFrame, users: DataFrame
 ) -> dict[str, tuple[DataFrame, list[str]]]:
     """Every target table's source DataFrame + mirror key, FK-safe order
-    (the extract+transform phases of §3.2 as lazy plans)."""
-    users = extract_users(tables, today=today)
-    members_t = target_members(tables, today=today)
+    (the extract+transform phases of §3.2 as lazy plans). `mem` is the run's
+    unscoped `members()` frame and `users` its `extract_users` consolidation;
+    every person-keyed source derives from these two."""
+    members_t = target_members(mem)
     clubs_t = E.clubs(tables, active_only=True).select("uid", "number", "name", "region")
     regions_t = E.regions(tables).select("uid", "number", "name")
     addresses_t = E.addresses(tables, mailing_only=True).join(
@@ -137,100 +149,54 @@ def _build_sources(
     }
 
 
-def run_mirror_sync(
-    tables: dict[str, DataFrame],
-    targets: dict[str, DataFrame],
-    today: str | None = None,
-) -> tuple[dict[str, DataFrame], dict[str, dict]]:
-    """Compute every target table's post-state + stats, FK-safe order.
-
-    `targets` holds the current mirror state (empty DataFrames on first run).
-    Returns ({table: post_state_df}, {table: {upserted, deleted, duration_s}})
-    — the caller materializes post-states in LOAD_ORDER and applies deletes in
-    reverse order, preserving the reference's consistency discipline
-    (SURVEY §7.4.5).
-    """
-    sources = _build_sources(tables, today=today)
-    post, stats = {}, {}
-    for name in LOAD_ORDER:
-        src, keys = sources[name]
-        tgt = targets.get(name)
-        if tgt is None:  # first run: empty mirror with the source schema
-            tgt = src.limit(0)
-        t0 = time.perf_counter()
-        post[name] = mirror_sync(tgt, src, keys)
-        s = mirror_stats(tgt, src, keys)
-        s.duration_s = time.perf_counter() - t0
-        stats[name] = s.as_dict()
-    return post, stats
-
-
 def run_mirror_sync_and_write(
     tables: dict[str, DataFrame],
     spark,
     mirror_dir: str,
     today: str | None = None,
 ) -> dict[str, dict]:
-    """One-pass sync: per entity, the mirror write IS the job that computes
-    the stats (operators/mirror.mirror_sync_observed) — no separate count
-    jobs, halving the actions per table vs run_mirror_sync + counts.
-    Writes in LOAD_ORDER through a temp dir (same discipline as
-    write_post_states). Returns the per-entity stats map.
+    """One sync run: per entity in LOAD_ORDER, the mirror write IS the job
+    that computes the stats (operators/mirror.mirror_sync_observed).
+
+    `today` defaults to the UTC date at run start; the run's one `members()`
+    frame and its `users` consolidation are cached for the run and released
+    at its end (module docstring). Each table writes to a temp dir first —
+    the post-state plan reads the live mirror files, so an in-place overwrite
+    would truncate its own input mid-scan. Returns the per-entity stats map.
     """
-    import os
-    import shutil
-
-    from aci_export_spark.operators.mirror import mirror_sync_observed
-
+    today = today or utc_today()
     targets = load_targets(spark, mirror_dir)
-    sources = _build_sources(tables, today=today)
-    stats: dict[str, dict] = {}
-    for name in LOAD_ORDER:
-        src, keys = sources[name]
-        tgt = targets.get(name)
-        if tgt is None:
-            tgt = src.limit(0)
-        t0 = time.perf_counter()
-        post, obs = mirror_sync_observed(tgt, src, keys)
-        path = os.path.join(mirror_dir, f"{name}.parquet")
-        tmp = path + ".tmp"
-        post.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(tmp, path)
-        got = obs.get
-        stats[name] = {
-            "upserted": int(got["upserted"] or 0),
-            "deleted": int(got["deleted"] or 0),
-            "duration_s": round(time.perf_counter() - t0, 3),
-        }
+    with persisted(M.members(tables, today=today)) as mem, \
+            persisted(extract_users(tables, mem)) as users:
+        sources = _build_sources(tables, mem, users)
+        stats: dict[str, dict] = {}
+        for name in LOAD_ORDER:
+            src, keys = sources[name]
+            tgt = targets.get(name)
+            if tgt is None:  # first run: empty mirror with the source schema
+                tgt = src.limit(0)
+            t0 = time.perf_counter()
+            post, obs = mirror_ops.mirror_sync_observed(tgt, src, keys)
+            path = os.path.join(mirror_dir, f"{name}.parquet")
+            tmp = path + ".tmp"
+            post.write.mode("overwrite").parquet(tmp)
+            if os.path.exists(path):
+                shutil.rmtree(path)
+            os.rename(tmp, path)
+            got = obs.get
+            stats[name] = {
+                "upserted": int(got["upserted"] or 0),
+                "deleted": int(got["deleted"] or 0),
+                "duration_s": round(time.perf_counter() - t0, 3),
+            }
     return stats
 
 
 def load_targets(spark, mirror_dir: str) -> dict[str, DataFrame | None]:
     """Read the current mirror state; None for tables not yet materialized
-    (first run — run_mirror_sync substitutes an empty frame)."""
-    import os
-
+    (first run — run_mirror_sync_and_write substitutes an empty frame)."""
     out: dict[str, DataFrame | None] = {}
     for name in LOAD_ORDER:
         path = os.path.join(mirror_dir, f"{name}.parquet")
         out[name] = spark.read.parquet(path) if os.path.exists(path) else None
     return out
-
-
-def write_post_states(post: dict[str, DataFrame], mirror_dir: str) -> None:
-    """Materialize post-states in LOAD_ORDER (FK-safe for readers,
-    SURVEY §7.4.5). Each table writes to a temp dir first — the post-state
-    plan reads the live mirror files, so an in-place overwrite would truncate
-    its own input mid-scan."""
-    import os
-    import shutil
-
-    for name in LOAD_ORDER:
-        path = os.path.join(mirror_dir, f"{name}.parquet")
-        tmp = path + ".tmp"
-        post[name].write.mode("overwrite").parquet(tmp)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(tmp, path)

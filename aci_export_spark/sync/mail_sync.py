@@ -14,7 +14,9 @@ import logging
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from aci_export_spark.functions.dates import utc_today
 from aci_export_spark.queries import members as M
+from aci_export_spark.session import persisted
 from aci_export_spark.sync import mail as mail_mod
 from aci_export_spark.sync.rest import (
     retain_audience_sink,
@@ -67,7 +69,12 @@ def run_job(
     {upserted, upsert_errors, deleted, tag_updates} — the reference's
     per-job stats; `upserted` counts documents that LANDED (per-item batch
     rejections are logged and reported in `upsert_errors`, not counted as
-    upserted).
+    upserted). Every count is taken in the sink's pushing pass.
+
+    `today` defaults to the UTC date at job start. The documents frame is
+    persisted for the job, so the upsert, retain and tag sinks share one
+    evaluation of `members()`; it is released when the job ends, also when
+    it fails.
 
     Pre-flight validation before any write (the reference's job-create
     guard, sync-mail/src/cmd/create.rs:33-35): the API must answer the
@@ -75,18 +82,19 @@ def run_job(
     fails HERE, not mid-upsert with half a batch landed."""
     from aci_export_spark.sync.rest import health_ping
 
+    today = today or utc_today()
     health_ping(client_factory())
     if "mailchimp_audience" not in tables:
         raise ValueError("audience table missing from catalog — nothing to sync against")
-    docs = documents_for_scope(tables, club=club, region=region, today=today)
-    # per-item rejections are logged by the sink and surfaced in the stats
-    # (the reference prints them in its SyncStats run report)
-    err_acc = docs.sparkSession.sparkContext.accumulator(0)
-    upserted = upsert_documents_sink(docs, client_factory, error_counter=err_acc)
-    deleted = retain_audience_sink(
-        tables["mailchimp_audience"], docs.select("id"), client_factory
-    )
-    tag_updates = update_tags_sink(mail_mod.member_tags(docs), client_factory)
+    with persisted(documents_for_scope(tables, club=club, region=region, today=today)) as docs:
+        # per-item rejections are logged by the sink and surfaced in the stats
+        # (the reference prints them in its run report)
+        err_acc = docs.sparkSession.sparkContext.accumulator(0)
+        upserted = upsert_documents_sink(docs, client_factory, error_counter=err_acc)
+        deleted = retain_audience_sink(
+            tables["mailchimp_audience"], docs.select("id"), client_factory
+        )
+        tag_updates = update_tags_sink(mail_mod.member_tags(docs), client_factory)
     return {
         "upserted": upserted - err_acc.value,
         "upsert_errors": err_acc.value,
@@ -102,7 +110,9 @@ def run_jobs(
     today: str | None = None,
 ) -> dict[str, dict]:
     """Driver-loop job fan-out with per-job fault isolation (T6): a failing
-    job records its error and the others proceed."""
+    job records its error and the others proceed. `today` defaults to the
+    UTC date at the start of the run and is the same for every job."""
+    today = today or utc_today()
     results: dict[str, dict] = {}
     for job in jobs:
         name = str(job.get("id", job.get("name", "job")))

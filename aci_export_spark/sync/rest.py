@@ -9,6 +9,11 @@ A production client implements the same interface with `requests`.
 Reference parameters preserved (BASELINE.md): 300 members/batch, bounded
 concurrent batches (here: partition count bounds concurrency), retry ×3
 exponential backoff factor 2 capped 5 s with jitter; 401/403/404 permanent.
+
+Each sink returns what it sent, counted by an accumulator inside its one
+`foreachPartition` pass after each call succeeds. Spark applies an action's
+accumulator updates once per successful task, so a retried task is not
+counted twice, and no second job re-reads the input to count it.
 """
 
 from __future__ import annotations
@@ -193,13 +198,15 @@ def upsert_documents_sink(
     partition chunks rows and retries per batch. Per-item rejections inside
     an otherwise-successful batch are logged individually (the reference's
     members.rs:166-171 error loop) and counted into `error_counter` (a
-    Spark accumulator) when the caller passes one. Returns the document
-    count.
+    Spark accumulator) when the caller passes one. Returns the number of
+    documents sent, counted in the pushing pass.
     """
     docs = documents.coalesce(concurrency)
+    sent = documents.sparkSession.sparkContext.accumulator(0)
 
     def submit(client, chunk: list[dict]) -> None:
         resp = with_retries(client.batch_upsert, chunk)
+        sent.add(len(chunk))
         for e in resp.get("errors", []) if isinstance(resp, dict) else []:
             log.warning(
                 "upsert item rejected: %s: %s", e.get("email_address"), e.get("error")
@@ -226,13 +233,15 @@ def upsert_documents_sink(
             submit(client, chunk)
 
     docs.foreachPartition(push)
-    return documents.count()
+    return sent.value
 
 
 def retain_audience_sink(audience, keep_ids, client_factory, concurrency: int = 10) -> int:
     """S11: delete audience members whose id is not in the keep set, skipping
     status='cleaned' rows (members.rs:59-97). The diff is a broadcast
-    anti-join; only the stragglers reach the API."""
+    anti-join; only the stragglers reach the API. Returns the number of
+    deletes sent, counted in the pushing pass (the audience has changed by
+    the time it returns, so it is not read again)."""
     from pyspark.sql import functions as F
     from pyspark.sql.functions import broadcast
 
@@ -242,19 +251,27 @@ def retain_audience_sink(audience, keep_ids, client_factory, concurrency: int = 
         .select("id")
         .coalesce(concurrency)
     )
+    sent = audience.sparkSession.sparkContext.accumulator(0)
 
     def push(rows) -> None:
         client = client_factory()
         for row in rows:
             with_retries(client.delete_member, row["id"])
+            sent.add(1)
 
     to_delete.foreachPartition(push)
-    return to_delete.count()
+    return sent.value
 
 
 def update_tags_sink(tags, client_factory, batch_size: int = 1000, concurrency: int = 10) -> int:
-    """Tag updates in chunks of 1000, bounded concurrency (members.rs:249-274)."""
+    """Tag updates in chunks of 1000, bounded concurrency (members.rs:249-274).
+    Returns the number of tag updates sent, counted in the pushing pass."""
     t = tags.coalesce(concurrency)
+    sent = tags.sparkSession.sparkContext.accumulator(0)
+
+    def submit(client, chunk: list[dict]) -> None:
+        with_retries(client.update_tags, chunk)
+        sent.add(len(chunk))
 
     def push(rows) -> None:
         client = client_factory()
@@ -262,13 +279,13 @@ def update_tags_sink(tags, client_factory, batch_size: int = 1000, concurrency: 
         for row in rows:
             chunk.append({"id": row["id"], "tag": row["tag"], "status": row["status"]})
             if len(chunk) >= batch_size:
-                with_retries(client.update_tags, chunk)
+                submit(client, chunk)
                 chunk = []
         if chunk:
-            with_retries(client.update_tags, chunk)
+            submit(client, chunk)
 
     t.foreachPartition(push)
-    return tags.count()
+    return sent.value
 
 
 def paged_rest_source(

@@ -32,49 +32,56 @@ def aci(spark, fixture_dir):
     return load_catalog(spark, fixture_dir)
 
 
+def _persisted_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
 class TestAppSync:
     def test_first_run_then_idempotent(self, spark, aci, tmp_path):
-        from aci_export_spark.sync.app_sync import (
-            LOAD_ORDER, load_targets, run_mirror_sync, write_post_states,
-        )
-
-        mirror = str(tmp_path / "mirror")
         import os
 
+        from aci_export_spark.sync.app_sync import LOAD_ORDER, run_mirror_sync_and_write
+
+        mirror = str(tmp_path / "mirror")
         os.makedirs(mirror)
+
+        def written(name):
+            return spark.read.parquet(os.path.join(mirror, f"{name}.parquet")).count()
+
         # first run: empty mirror → all upserts, no deletes
-        post, stats = run_mirror_sync(aci, load_targets(spark, mirror), today=TODAY_S)
+        stats = run_mirror_sync_and_write(aci, spark, mirror, today=TODAY_S)
         assert set(stats) == set(LOAD_ORDER)
         for name in LOAD_ORDER:
             assert stats[name]["deleted"] == 0
-            assert stats[name]["upserted"] == post[name].count() > 0
-        write_post_states(post, mirror)
+            assert stats[name]["upserted"] == written(name) > 0
+        before = {name: written(name) for name in LOAD_ORDER}
 
         # second run over the already-synced mirror: converged — the
         # post-state equals the mirror, and nothing is deleted
-        targets2 = load_targets(spark, mirror)
-        post2, stats2 = run_mirror_sync(aci, targets2, today=TODAY_S)
+        stats2 = run_mirror_sync_and_write(aci, spark, mirror, today=TODAY_S)
         for name in LOAD_ORDER:
             assert stats2[name]["deleted"] == 0, name
-            assert post2[name].count() == targets2[name].count(), name
+            assert written(name) == before[name], name
 
     def test_mirror_gc_deletes_vanished_rows(self, spark, aci, tmp_path):
-        from aci_export_spark.operators.mirror import mirror_stats, mirror_sync
+        from aci_export_spark.operators.mirror import mirror_sync_observed
 
         src = aci["clubs"].select("uid", "name")
         # stale mirror: an extra row that no longer exists in the source
         stale = src.unionByName(
             spark.createDataFrame([(99999, "Ghost Club")], ["uid", "name"])
         )
-        post = mirror_sync(stale, src, ["uid"])
-        st = mirror_stats(stale, src, ["uid"])
-        assert st.deleted == 1
-        assert post.filter(F.col("uid") == 99999).count() == 0
+        post, obs = mirror_sync_observed(stale, src, ["uid"])
+        path = str(tmp_path / "clubs.parquet")
+        post.write.parquet(path)
+        assert obs.get["deleted"] == 1
+        assert spark.read.parquet(path).filter(F.col("uid") == 99999).count() == 0
 
     def test_user_consolidation_includes_partners_and_leaders(self, aci):
+        from aci_export_spark.queries.members import members
         from aci_export_spark.sync.app_sync import extract_users
 
-        users = extract_users(aci, today=TODAY_S)
+        users = extract_users(aci, members(aci, today=TODAY_S))
         # synthetic id present and email-derived (db/src/user.rs:31-35)
         row = users.filter(F.col("email").isNotNull()).first()
         digest = hashlib.sha256(row["email"].strip().lower().encode()).digest()
@@ -83,6 +90,67 @@ class TestAppSync:
         assert row["id"] == base64.urlsafe_b64encode(digest).rstrip(b"=").decode()
         # uids unique
         assert users.count() == users.select("uid").distinct().count()
+
+    def test_run_releases_its_cache(self, spark, aci, tmp_path, monkeypatch):
+        """The run's persisted members and users frames are released when
+        the run ends, whether it succeeds or fails."""
+        from aci_export_spark.operators import mirror
+        from aci_export_spark.sync.app_sync import LOAD_ORDER, run_mirror_sync_and_write
+
+        before = _persisted_rdds(spark)
+        run_mirror_sync_and_write(aci, spark, str(tmp_path / "ok"), today=TODAY_S)
+        assert _persisted_rdds(spark) == before
+
+        # make the write of the entity after `users` raise
+        original = mirror.mirror_sync_observed
+        calls, held = [], []
+
+        def failing(target, source, keys):
+            calls.append(keys)
+            if len(calls) == LOAD_ORDER.index("users") + 2:
+                held.append(_persisted_rdds(spark))
+                raise RuntimeError("injected write failure")
+            return original(target, source, keys)
+
+        monkeypatch.setattr(mirror, "mirror_sync_observed", failing)
+        with pytest.raises(RuntimeError, match="injected write failure"):
+            run_mirror_sync_and_write(aci, spark, str(tmp_path / "fail"), today=TODAY_S)
+        # the cache was in use when the run failed, and it is gone now
+        assert held and held[0] > before
+        assert _persisted_rdds(spark) == before
+
+
+def test_today_pinned_once_per_run(spark, aci, tmp_path, monkeypatch):
+    """With today=None, a sync run resolves the UTC date once at its start:
+    every members() call of the run sees the same date string, even if the
+    clock moves on (here: the fake clock advances a day per reading)."""
+    from aci_export_spark.queries import members as M
+    from aci_export_spark.sync import app_sync, mail_sync
+    from aci_export_spark.sync.rest import JournalingMailchimpClient
+
+    readings = iter(f"2026-01-{d:02d}" for d in range(1, 32))
+    monkeypatch.setattr(app_sync, "utc_today", lambda: next(readings))
+    monkeypatch.setattr(mail_sync, "utc_today", lambda: next(readings))
+    seen: list = []
+    original = M.members
+
+    def recording(tables, *args, **kwargs):
+        seen.append(kwargs.get("today"))
+        return original(tables, *args, **kwargs)
+
+    monkeypatch.setattr(M, "members", recording)
+
+    app_sync.run_mirror_sync_and_write(aci, spark, str(tmp_path / "mirror"))
+    assert seen and seen[0] is not None and set(seen) == {seen[0]}
+
+    seen.clear()
+    results = mail_sync.run_jobs(
+        aci, jobs=[{"id": 1, "club": 5}, {"id": 2}],
+        client_factory_for=lambda job: lambda: JournalingMailchimpClient(
+            str(tmp_path / f"j{job['id']}")),
+    )
+    assert all("error" not in r for r in results.values()), results
+    assert len(seen) == 2 and seen[0] is not None and set(seen) == {seen[0]}
 
 
 class TestMailSync:
@@ -148,6 +216,40 @@ class TestMailSync:
         assert len(tags) == 4 * docs.count()
         assert {t["status"] for t in tags} <= {"active", "inactive"}
         assert stats["tag_updates"] == len(tags)
+
+    def test_sinks_count_what_they_sent(self, aci, tmp_path):
+        """Each REST sink returns the items it pushed, counted in the pushing
+        pass: equal to the journaled items and calls, also when every batch
+        is retried once."""
+        import os
+
+        from aci_export_spark.sync.mail import member_tags
+        from aci_export_spark.sync.mail_sync import documents_for_scope
+        from aci_export_spark.sync.rest import (
+            JournalingMailchimpClient,
+            retain_audience_sink,
+            update_tags_sink,
+            upsert_documents_sink,
+        )
+
+        base = str(tmp_path / "journal")
+
+        def factory():
+            return JournalingMailchimpClient(base, fail_first_n_attempts=1)
+
+        def calls(sub):
+            return len(os.listdir(os.path.join(base, sub)))
+
+        docs = documents_for_scope(aci, today=TODAY_S)
+        client = JournalingMailchimpClient(base)
+        upserted = upsert_documents_sink(docs, factory, batch_size=7)
+        assert upserted == len(client.upserted_rows()) == docs.count()
+        assert calls("upserts") >= upserted / 7
+        deleted = retain_audience_sink(aci["mailchimp_audience"], docs.select("id"), factory)
+        assert deleted == len(client.deleted_ids()) == calls("deletes") > 0
+        tagged = update_tags_sink(member_tags(docs), factory, batch_size=11)
+        assert tagged == len(client.tag_updates()) == 4 * docs.count()
+        assert calls("tags") >= tagged / 11
 
     def test_batch_item_errors_logged_and_counted(self, aci, tmp_path):
         from aci_export_spark.sync.mail_sync import documents_for_scope, run_job
@@ -408,21 +510,31 @@ class TestPipelineCli:
 class TestObservedSync:
     def test_one_pass_sync_matches_two_pass(self, spark, aci, tmp_path):
         """run_mirror_sync_and_write (observe-based, one job per entity)
-        produces the same mirror state and stats as the two-pass path."""
+        writes the post-state of the mirror_sync reference algebra, with its
+        stats."""
         import os
+        from collections import Counter
 
+        from aci_export_spark.operators.mirror import mirror_sync
+        from aci_export_spark.queries.members import members
         from aci_export_spark.sync.app_sync import (
-            LOAD_ORDER, load_targets, run_mirror_sync, run_mirror_sync_and_write,
+            LOAD_ORDER, _build_sources, extract_users, run_mirror_sync_and_write,
         )
 
         m1 = str(tmp_path / "m1"); os.makedirs(m1)
         stats1 = run_mirror_sync_and_write(aci, spark, m1, today=TODAY_S)
-        post2, stats2 = run_mirror_sync(aci, load_targets(spark, str(tmp_path / "void")), today=TODAY_S)
+        mem = members(aci, today=TODAY_S)
+        sources = _build_sources(aci, mem, extract_users(aci, mem))
         for name in LOAD_ORDER:
-            assert stats1[name]["upserted"] == stats2[name]["upserted"], name
-            assert stats1[name]["deleted"] == stats2[name]["deleted"] == 0, name
+            src, keys = sources[name]
+            want = mirror_sync(src.limit(0), src, keys)
+            assert stats1[name]["upserted"] == src.count(), name
+            assert stats1[name]["deleted"] == 0, name
             written = spark.read.parquet(os.path.join(m1, f"{name}.parquet"))
-            assert written.count() == post2[name].count(), name
+            assert written.count() == want.count(), name
+            assert Counter(map(tuple, written.collect())) == Counter(
+                map(tuple, want.select(*written.columns).collect())
+            ), name
         # second one-pass run converges with zero deletes
         stats3 = run_mirror_sync_and_write(aci, spark, m1, today=TODAY_S)
         for name in LOAD_ORDER:
