@@ -562,68 +562,6 @@ DRIVER_WINDOW_PRIORITY: list[str] = [
     "f7_f8_hash_ids",
 ]
 
-#: ROUND-11 DRIVER WINDOW (superseded by the ROUND-13 rotation above;
-#: retained as the r11/r12 audit trail the comments reference).
-_DRIVER_WINDOW_PRIORITY_R11: list[str] = [
-    "flagship_scoped_members",
-    # the 26 r5-era WINDOW_DEFERRED repayments — mandated window head
-    # (VERDICT r10 #1), alphabetical
-    "basket_brand_pairs",
-    "basket_brand_triples",
-    "docs_cube_stats",
-    "dq_check_report",
-    "dq_profile_customer",
-    "events_anomalous_days",
-    "events_retention_cohorts",
-    "events_rolling_active_users",
-    "events_scd2_history",
-    "events_time_to_convert",
-    "events_transition_matrix",
-    "events_trending_topk",
-    "events_value_deciles",
-    "events_zorder_keys",
-    "events_zorder_pruning_stats",
-    "ivm_orders_maintained_agg",
-    "j_salted_join_equivalence",
-    "llm_bloom_membership",
-    "orders_benford_digits",
-    "orders_pareto_frontier",
-    "orders_value_gini",
-    "parts_price_band_pairs",
-    "q12_late_shipment_modes",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "rec_item_item_cosine",
-    # module-changed-after-row re-checks: the r10 advice retired the
-    # neighbor_id tie-break in retrieval_auc for exact tie-corrected
-    # midranks — the VALUES changed, so the driver must re-prove it
-    "llm_retrieval_auc",
-    # new registrations this round (never driver-checked), displacing r6
-    # backfill tail-first
-    "llm_quality_kn_trigram",
-    "events_mann_kendall",
-    "orders_hhi_concentration",
-    "mm_webp_info",
-    "mm_ogg_pages",
-    "llm_blocklist_match",
-    "events_theil_sen",
-    "events_pettitt",
-    "mm_pdf_pages",
-    "events_isotonic_calibration",
-    "llm_fisher_terms_fdr",
-    "mm_mkv_tracks",
-    "mm_tar_entries",
-    "mm_gzip_members",
-    "events_ks_two_sample",
-    "events_cochran_armitage",
-    "llm_mcnemar_filters",
-    "events_runs_test",
-    # r6-cohort backfill (alphabetical; remainder repays at the r12 head)
-    "docs_hybrid_rrf_topk",
-    "docs_inverted_index",
-    "docs_source_similarity",
-    "dq_join_key_skew",
-]
 
 
 def _ordered_names() -> list[str]:

@@ -757,19 +757,6 @@ AV_META_SCHEMA = (
 )
 
 
-def _fake_av_meta(byte_len: int, media_type: str):
-    """Deterministic fake A/V metadata (mirrored by the DuckDB oracle):
-    modality-appropriate NULL shape, values derived from the byte length."""
-    dur = 1000 + (byte_len * 13) % 59000
-    if media_type == "audio":
-        return dur, 8000 + (byte_len % 37) * 1000, 1 + byte_len % 2, None, None
-    if media_type == "video":
-        w, h = _fake_dims(byte_len)
-        return dur, None, None, w, h
-    w, h = _fake_dims(byte_len)
-    return None, None, None, w, h  # image: no duration
-
-
 def _real_av_meta(content: bytes, media_type: str):
     data = bytes(content)
     if media_type == "image":

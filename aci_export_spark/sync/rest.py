@@ -9,6 +9,8 @@ A production client implements the same interface with `requests`.
 Reference parameters preserved (BASELINE.md): 300 members/batch, bounded
 concurrent batches (here: partition count bounds concurrency), retry ×3
 exponential backoff factor 2 capped 5 s with jitter; 401/403/404 permanent.
+A 404 on delete means the member is already gone (an earlier attempt of a
+retried task sent the delete), so the retain sink counts it as done.
 
 Each sink returns what it sent, counted by an accumulator inside its one
 `foreachPartition` pass after each call succeeds. Spark applies an action's
@@ -239,9 +241,11 @@ def upsert_documents_sink(
 def retain_audience_sink(audience, keep_ids, client_factory, concurrency: int = 10) -> int:
     """S11: delete audience members whose id is not in the keep set, skipping
     status='cleaned' rows (members.rs:59-97). The diff is a broadcast
-    anti-join; only the stragglers reach the API. Returns the number of
-    deletes sent, counted in the pushing pass (the audience has changed by
-    the time it returns, so it is not read again)."""
+    anti-join; only the stragglers reach the API. A delete answered with 404
+    is already done: a retried task re-sends the deletes its failed attempt
+    got through. Returns the number of members deleted, counted in the
+    pushing pass (the audience has changed by the time it returns, so it is
+    not read again)."""
     from pyspark.sql import functions as F
     from pyspark.sql.functions import broadcast
 
@@ -256,7 +260,11 @@ def retain_audience_sink(audience, keep_ids, client_factory, concurrency: int = 
     def push(rows) -> None:
         client = client_factory()
         for row in rows:
-            with_retries(client.delete_member, row["id"])
+            try:
+                with_retries(client.delete_member, row["id"])
+            except PermanentError as e:
+                if e.status != 404:
+                    raise
             sent.add(1)
 
     to_delete.foreachPartition(push)

@@ -251,6 +251,40 @@ class TestMailSync:
         assert tagged == len(client.tag_updates()) == 4 * docs.count()
         assert calls("tags") >= tagged / 11
 
+    def test_retain_counts_delete_404_as_already_gone(self, aci, tmp_path):
+        """A delete answered with 404 (sent before by a failed attempt of a
+        retried task) counts as done instead of failing the job; 401 still
+        fails it."""
+        from aci_export_spark.sync.rest import (
+            JournalingMailchimpClient,
+            PermanentError,
+            retain_audience_sink,
+        )
+
+        audience = aci["mailchimp_audience"]
+        keep = audience.select("id").limit(0)  # every non-cleaned member is stale
+        stale = sorted(
+            r["id"] for r in audience.filter(F.col("status") != "cleaned").collect()
+        )
+        gone = set(stale[::2])
+        base = str(tmp_path / "journal")
+
+        class GoneClient(JournalingMailchimpClient):
+            def delete_member(self, member_id: str) -> None:
+                if member_id in gone:
+                    raise PermanentError(404, "resource not found")
+                super().delete_member(member_id)
+
+        class UnauthorizedClient(JournalingMailchimpClient):
+            def delete_member(self, member_id: str) -> None:
+                raise PermanentError(401, "bad api key")
+
+        deleted = retain_audience_sink(audience, keep, lambda: GoneClient(base))
+        assert deleted == len(stale) > len(gone) > 0
+        assert JournalingMailchimpClient(base).deleted_ids() == set(stale) - gone
+        with pytest.raises(Exception, match="permanent HTTP 401"):
+            retain_audience_sink(audience, keep, lambda: UnauthorizedClient(base))
+
     def test_batch_item_errors_logged_and_counted(self, aci, tmp_path):
         from aci_export_spark.sync.mail_sync import documents_for_scope, run_job
         from aci_export_spark.sync.rest import JournalingMailchimpClient
@@ -456,30 +490,6 @@ class TestConfigAndBatchProtocol:
         assert [o["method"] for o in ops] == ["POST", "PUT", "DELETE"]
 
 
-class TestRestDataSource:
-    def test_python_datasource_paged_scan(self, spark):
-        import hashlib
-
-        from aci_export_spark.sync import rest_datasource
-
-        rest_datasource.register(spark)
-        df = (
-            spark.read.format("rest_pages")
-            .option("total_count", "2357")
-            .option("page_size", "300")
-            .load()
-        )
-        assert df.rdd.getNumPartitions() == 8  # one partition per page
-        rows = df.collect()
-        assert len(rows) == 2357
-        assert {r["page"] for r in rows} == set(range(8))
-        r0 = next(r for r in rows if r["email_address"] == "member0@list.test")
-        assert r0["id"] == hashlib.md5(b"member0@list.test").hexdigest()
-        # composes with the DataFrame API: filter + aggregate over the source
-        n_cleaned = df.filter(df.status == "cleaned").count()
-        assert n_cleaned == len([i for i in range(2357) if i % 9 == 0])
-
-
 class TestPipelineCli:
     def test_pipeline_list_and_run(self):
         import io as _io
@@ -558,3 +568,29 @@ def test_read_jsonl_quarantines_malformed(spark, tmp_path):
     assert {r["doc_id"] for r in good} == {1, 2}
     assert len(bad) == 2  # the non-JSON line and the type mismatch
     assert all(r["doc_id"] is None for r in bad if r["_corrupt_record"] == "this is not json")
+
+
+def test_aci_runtime_imports_only_runtime_modules():
+    """Importing the ACI entry points (CLI, both sync pipelines, the query
+    library) loads no registry harness, `llm` or `streaming` module, nor any
+    other module outside the runtime packages, so deleting a non-runtime
+    family cannot break an ACI path. Runs in a fresh interpreter, no Spark."""
+    import os
+    import subprocess
+
+    runtime = {"cli", "functions", "operators", "queries", "session", "sources", "sync"}
+    code = (
+        "import sys\n"
+        "import aci_export_spark.cli, aci_export_spark.sync.app_sync\n"
+        "import aci_export_spark.sync.mail_sync\n"
+        "from aci_export_spark.queries import entities, leadership, members, roles\n"
+        "print('\\n'.join(m for m in sys.modules if m.startswith('aci_export_spark.')))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True, check=True
+    ).stdout.split()
+    tops = {m.split(".")[1] for m in out}
+    assert {"cli", "sync", "queries"} <= tops
+    outside = sorted(m for m in out if m.split(".")[1] not in runtime)
+    assert not outside, f"ACI runtime imports non-runtime modules: {outside}"
