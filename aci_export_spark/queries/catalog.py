@@ -4,11 +4,19 @@ A catalog is just `dict[str, DataFrame]` — parquet fixtures in tests, JDBC
 scans in production (same shape the reference got from its MySQL pool,
 `ddb/src/lib.rs:21-33`). Keeping it a plain dict keeps every query function
 pure and source-agnostic.
+
+Keyed member lookups (`members.member_by_uid`, `members.member_by_email`)
+are the one exception to "pure": they read a persisted snapshot of
+`members()` taken at the first lookup for that catalog and `today`
+(`members.lookup_extract`). Reopening the catalog with `load_catalog` releases
+the snapshot, so the next lookup picks up new source rows.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+
+from aci_export_spark.queries.members import release_lookup_extract
 
 ACI_TABLES = (
     "users",
@@ -31,4 +39,7 @@ ACI_TABLES = (
 
 
 def load_catalog(spark: SparkSession, base_dir: str, tables=ACI_TABLES) -> dict[str, DataFrame]:
+    """Open the catalog under `base_dir`, releasing the held member-lookup
+    extract so the next keyed lookup reads the current source rows."""
+    release_lookup_extract()
     return {t: spark.read.parquet(f"{base_dir}/{t}.parquet") for t in tables}

@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from aci_export_spark.functions.dates import utc_today
 from aci_export_spark.functions.text import split_csv_trim
 from aci_export_spark.operators.dedup import argmax_per_key, dedupe_keep_min, priority_dedup
 
@@ -113,31 +114,22 @@ def members(
 
     scoped = club is not None or region is not None
     if scoped:
-        # J5: scope = single club ∪ clubs-of-region
-        club_keys = clubs.filter(F.col("uid") == F.lit(club if club is not None else -1))
-        region_clubs = clubs.filter(
-            F.col("region_uid") == F.lit(region if region is not None else -1)
-        )
-        scope = (
-            club_keys.select(F.col("uid").alias("club_uid"))
-            .unionByName(region_clubs.select(F.col("uid").alias("club_uid")))
-            .distinct()
-        )
+        # J5: scope = single club ∪ clubs-of-region, as one filter (a NULL
+        # parameter compares NULL and selects nothing); duplicate keys do not
+        # change a semi-join, so the scope needs no distinct
+        scope = clubs.filter(
+            (F.col("uid") == F.lit(club)) | (F.col("region_uid") == F.lit(region))
+        ).select(F.col("uid").alias("club_uid"))
         periods = periods.join(broadcast(scope), on="club_uid", how="left_semi")
         active = _active_periods(periods, t, grace_months=None)
     else:
         active = _active_periods(periods, t, grace_months=12)
 
-    # A1 flags + A3 argmax pick over the scope-filtered active periods
+    # A1 flag + A3 argmax pick over the scope-filtered active periods
     flags = active.groupBy(F.col("user_uid").alias("user_id")).agg(
         (F.max(F.col("member_type").isin(*("regular", "intraclub")).cast("int")) == 1).alias(
             "has_regular_link"
         ),
-        (F.max((F.col("member_type") == "affiliate").cast("int")) == 1).alias(
-            "has_affiliate_link"
-        ),
-        F.max("join_date").alias("latest_join"),
-        F.max("leave_date").alias("latest_leave"),
     )
     picked = argmax_per_key(
         active, ["user_uid"], "join_date", tie_break=[F.col("paragraph_id").asc()]
@@ -229,15 +221,56 @@ def members(
     )
 
 
+# The one members() extract keyed lookups filter, as (key, persisted frame);
+# see `lookup_extract`.
+_LOOKUP_INPUTS = ("member_search", "membership_paragraphs", "taxonomy", "clubs", "brns")
+_held: tuple[tuple, DataFrame] | None = None
+
+
+def release_lookup_extract() -> None:
+    """Unpersist the held lookup extract, if any. One whose session was
+    stopped is only dropped: its cache went with the session."""
+    global _held
+    if _held is not None:
+        frame = _held[1]
+        _held = None
+        if frame.sparkSession.sparkContext._jsc is not None:
+            frame.unpersist()
+
+
+def lookup_extract(
+    tables: dict[str, DataFrame],
+    club: int | None = None,
+    region: int | None = None,
+    statuses: tuple[str, ...] = STATUS_ALL,
+    today: str | None = None,
+) -> DataFrame:
+    """`members(tables, club, region, statuses, today)` persisted, built at
+    the first keyed lookup for that catalog and parameter set and reused by
+    every later one: a snapshot of the sources at that lookup. At most one
+    extract is held; preparing another key, or reopening the catalog
+    (`catalog.load_catalog`), releases it. `today=None` resolves to the UTC
+    date now, so no persisted plan carries `current_date()`."""
+    global _held
+    statuses, today = tuple(statuses), today or utc_today()
+    # DataFrames compare by identity, so the key names this opened catalog
+    key = (tuple(tables[t] for t in _LOOKUP_INPUTS), club, region, statuses, today)
+    if _held is None or _held[0] != key:
+        release_lookup_extract()
+        _held = (key, members(tables, club, region, statuses, today).persist())
+    return _held[1]
+
+
 def member_by_uid(tables: dict[str, DataFrame], uid: int, **kw) -> DataFrame:
-    """P12 point lookup (reference :57-67)."""
-    return members(tables, **kw).filter(F.col("user_id") == uid).limit(1)
+    """P12 point lookup (reference :57-67), a filter on `lookup_extract`."""
+    return lookup_extract(tables, **kw).filter(F.col("user_id") == uid).limit(1)
 
 
 def member_by_email(tables: dict[str, DataFrame], email: str, **kw) -> DataFrame:
-    """P12 point lookup by normalized email (reference :69-78)."""
+    """P12 point lookup by normalized email (reference :69-78), a filter on
+    `lookup_extract`."""
     return (
-        members(tables, **kw)
+        lookup_extract(tables, **kw)
         .filter(F.lower(F.trim(F.col("email"))) == email.strip().lower())
         .limit(1)
     )

@@ -21,6 +21,7 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -92,9 +93,16 @@ def get_spark(
 @contextmanager
 def persisted(df: DataFrame):
     """`df` persisted for the block and released when it exits, also on an
-    exception: a run's shared intermediate never outlives the run."""
-    df.persist()
+    exception: a run's shared intermediate never outlives the run.
+
+    Spark's CacheManager shares one entry between plans that are equal after
+    canonicalization, so if a plan-equal frame is already cached (by another
+    owner), the block reads that entry and leaves it cached at exit."""
+    owned = df.storageLevel == StorageLevel.NONE
+    if owned:
+        df.persist()
     try:
         yield df
     finally:
-        df.unpersist()
+        if owned:
+            df.unpersist()

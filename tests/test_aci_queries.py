@@ -4,13 +4,22 @@ deterministic fixtures — the correctness harness the reference never had
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import textwrap
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
 from aci_export_spark.queries import members as M
 from aci_export_spark.queries import leadership as L
 from aci_export_spark.queries import entities as E
+from aci_export_spark.queries.catalog import load_catalog
 from tests.aci_fixtures import build_fixtures, TODAY
+
+REPO = str(Path(__file__).resolve().parents[1])
 
 
 @pytest.fixture(scope="session")
@@ -104,6 +113,138 @@ class TestMembers:
         assert M.member_by_uid(aci, 4, today=TODAY_S).count() == 1
         got = M.member_by_email(aci, "user4@mail.test", today=TODAY_S).collect()
         assert len(got) == 1 and got[0].user_id == 4
+
+
+def _rows(df) -> list[dict]:
+    return [r.asDict(recursive=True) for r in df.collect()]
+
+
+def _persisted_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+@pytest.fixture(scope="module")
+def aci_dir(tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("aci_lookup_fixtures"))
+    build_fixtures(out)
+    return out
+
+
+OTHER_TODAY_S = "2021-06-01"
+
+
+class TestPointLookups:
+    """`member_by_uid` / `member_by_email` filter one persisted members()
+    extract (`M.lookup_extract`) and must answer exactly what members() with
+    the same parameters, filtered the same way, answers."""
+
+    @staticmethod
+    def _assert_lookups_match(tables, today, **scope):
+        ref = _rows(M.members(tables, today=today, **scope))
+        # fixture users are uids 1..60; 0 and 61 miss
+        for uid in range(0, 62):
+            got = _rows(M.member_by_uid(tables, uid, today=today, **scope))
+            assert got == [r for r in ref if r["user_id"] == uid], uid
+        raw = {r.email for r in tables["member_search"].select("email").collect()}
+        keys = {e for e in raw if e is not None} | {"nobody@nowhere.test", "  USER4@MAIL.TEST"}
+        for email in sorted(keys):
+            key = email.strip().lower()
+            want = [r for r in ref if r["email"] is not None and r["email"].strip().lower() == key]
+            got = _rows(M.member_by_email(tables, email, today=today, **scope))
+            if key:
+                assert got == want, email
+            else:  # every email-less member matches ''; the lookup returns one
+                assert len(got) == min(1, len(want)) and all(r in want for r in got)
+        return ref
+
+    def test_lookups_match_members(self, spark, aci_dir):
+        tables = load_catalog(spark, aci_dir)
+        ref = self._assert_lookups_match(tables, TODAY_S)
+        by_uid = {r["user_id"]: r for r in ref}
+        # partner-is-primary (uid 6) and the shared-email loser (uid 38) miss;
+        # the shared email resolves to the regular winner, uid 2
+        assert M.member_by_uid(tables, 6, today=TODAY_S).count() == 0
+        assert M.member_by_uid(tables, 38, today=TODAY_S).count() == 0
+        assert [r["user_id"] for r in _rows(
+            M.member_by_email(tables, "user2@mail.test", today=TODAY_S))] == [2]
+        # argmax ties (uid % 10 == 0) and NULL / '' email members are found
+        assert {10, 20, 30, 17, 34, 13, 26} <= set(by_uid)
+        assert by_uid[17]["email"] is None and by_uid[13]["email"] == ""
+
+        # identical after reopening the catalog
+        reopened = load_catalog(spark, aci_dir)
+        assert self._assert_lookups_match(reopened, TODAY_S) == ref
+        # and correct for a second today and for a club scope, where the
+        # shared-email affiliate (uid 38) survives
+        assert self._assert_lookups_match(reopened, OTHER_TODAY_S) != ref
+        self._assert_lookups_match(reopened, TODAY_S, club=5)
+        assert [r["user_id"] for r in _rows(
+            M.member_by_email(reopened, "user2@mail.test", club=5, today=TODAY_S))] == [38]
+        M.release_lookup_extract()
+
+    def test_one_extract_held_and_reopen_releases(self, spark, aci_dir):
+        tables = load_catalog(spark, aci_dir)
+        base = _persisted_rdds(spark)
+        M.member_by_uid(tables, 4, today=TODAY_S).collect()
+        assert _persisted_rdds(spark) == base + 1
+        M.member_by_email(tables, "user4@mail.test", today=TODAY_S).collect()
+        assert _persisted_rdds(spark) == base + 1  # same key: reused
+        M.member_by_uid(tables, 4, today=OTHER_TODAY_S).collect()
+        assert _persisted_rdds(spark) == base + 1  # new key: old released first
+        M.member_by_uid(tables, 4, club=5, today=OTHER_TODAY_S).collect()
+        assert _persisted_rdds(spark) == base + 1
+        load_catalog(spark, aci_dir)
+        assert _persisted_rdds(spark) == base
+
+    def test_extract_survives_a_sync_run(self, spark, aci_dir, tmp_path):
+        """A sync run on the same catalog and today shares the lookup
+        extract's cache entry (plan-equal members() frame) and must leave it
+        cached."""
+        from aci_export_spark.sync.app_sync import run_mirror_sync_and_write
+
+        tables = load_catalog(spark, aci_dir)
+        first = _rows(M.member_by_uid(tables, 4, today=TODAY_S))
+        before = _persisted_rdds(spark)
+        run_mirror_sync_and_write(tables, spark, str(tmp_path / "mirror"), today=TODAY_S)
+        assert _persisted_rdds(spark) == before
+        again = M.member_by_uid(tables, 4, today=TODAY_S)
+        assert "InMemoryTableScan" in again._jdf.queryExecution().executedPlan().toString()
+        assert _rows(again) == first
+        M.release_lookup_extract()
+
+    def test_lookup_after_session_restart(self, aci_dir):
+        """An extract whose session was stopped is dropped without raising,
+        both when a lookup prepares a new key and when the catalog is
+        reopened. Runs in its own process: it stops its session."""
+        script = textwrap.dedent(f"""
+            from aci_export_spark.queries import members as M
+            from aci_export_spark.queries.catalog import ACI_TABLES, load_catalog
+            from aci_export_spark.session import get_spark
+
+            def session():
+                s = get_spark("lookup-restart", master="local[1]", shuffle_partitions=2)
+                s.sparkContext.setLogLevel("ERROR")
+                return s
+
+            d, today = {aci_dir!r}, {TODAY_S!r}
+            spark = session()
+            want = M.member_by_uid(load_catalog(spark, d), 4, today=today).collect()
+            assert len(want) == 1
+            spark.stop()
+            spark = session()
+            fresh = {{t: spark.read.parquet(f"{{d}}/{{t}}.parquet") for t in ACI_TABLES}}
+            assert M.member_by_uid(fresh, 4, today=today).collect() == want
+            spark.stop()
+            spark = session()
+            assert M.member_by_uid(load_catalog(spark, d), 4, today=today).collect() == want
+            spark.stop()
+            print("restart-ok")
+        """)
+        env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"}
+        done = subprocess.run([sys.executable, "-c", script], cwd=REPO, env=env,
+                              capture_output=True, text=True, timeout=600)
+        assert done.returncode == 0, done.stderr[-3000:]
+        assert "restart-ok" in done.stdout
 
 
 class TestLeadership:

@@ -78,3 +78,29 @@ def test_second_invocation_recomputes_not_rereads(spark):
     harness.REGISTRY["flagship_scoped_members"].fn(spark, SF).collect()
     for df in leaked:
         assert not df.storageLevel.useMemory
+
+
+def test_persisted_keeps_a_plan_equal_cache_it_did_not_make(spark):
+    """CacheManager shares one entry between plan-equal frames: a
+    `session.persisted` block over a frame whose twin is already cached
+    must not release the twin's cache at exit, and must still release a
+    cache it made itself."""
+    from pyspark import StorageLevel
+
+    from aci_export_spark.session import persisted
+
+    def frame():
+        return spark.range(200).withColumn("k", F.col("id") % 7)
+
+    owner = frame().persist()
+    owner.count()
+    with persisted(frame()) as twin:
+        assert twin.count() == 200
+    assert owner.storageLevel != StorageLevel.NONE
+    assert "InMemoryTableScan" in owner._jdf.queryExecution().executedPlan().toString()
+    owner.unpersist()
+
+    with persisted(frame()) as own:
+        own.count()
+        assert own.storageLevel != StorageLevel.NONE
+    assert frame().storageLevel == StorageLevel.NONE
