@@ -3,6 +3,7 @@ query surface (aci-ddb), the mirror pipeline (sync-app) and the audience
 pipeline (sync-mail), over a directory of parquet tables.
 
     python -m aci_export_spark.cli --data-dir DIR ddb members --club 5
+    python -m aci_export_spark.cli --data-dir DIR ddb lookup < keys.txt
     python -m aci_export_spark.cli --data-dir DIR ddb leadership --type club --date-filter current
     python -m aci_export_spark.cli --data-dir DIR sync-app run --mirror-dir OUT
     python -m aci_export_spark.cli --data-dir DIR sync-mail run --journal-dir OUT --club 5
@@ -40,6 +41,11 @@ def _add_ddb(sub: argparse._SubParsersAction) -> None:
     members.add_argument("--email")
     members.add_argument("--today")
 
+    lookup = q.add_parser(
+        "lookup", help="keyed member lookups read from stdin, one uid or email a line"
+    )
+    lookup.add_argument("--today")
+
     lead = q.add_parser("leadership")
     lead.add_argument("--type", dest="entity_type",
                       choices=["club", "region", "international", "committee"])
@@ -76,6 +82,26 @@ def _add_ddb(sub: argparse._SubParsersAction) -> None:
     hist.add_argument("--uid", type=int, dest="user_uid")
 
 
+def _serve_lookups(tables, lines, today: str | None) -> None:
+    """Answer one keyed member lookup per input line on one opened catalog:
+    digits are a uid, anything else an email; blank lines are skipped. Each
+    answer is printed as one JSON line, `{"key": ..., "member": {...} or
+    null}`, as soon as it is known. Every lookup after the first filters the
+    extract the first one persisted (`members.lookup_extract`)."""
+    from aci_export_spark.queries import members as M
+
+    for line in lines:
+        key = line.strip()
+        if not key:
+            continue
+        if key.isdigit():
+            df = M.member_by_uid(tables, int(key), today=today)
+        else:
+            df = M.member_by_email(tables, key, today=today)
+        rows = [json.loads(s) for s in df.toJSON().collect()]
+        print(json.dumps({"key": key, "member": rows[0] if rows else None}), flush=True)
+
+
 def _run_ddb(args, tables) -> None:
     from aci_export_spark.queries import entities as E
     from aci_export_spark.queries import leadership as L
@@ -84,6 +110,9 @@ def _run_ddb(args, tables) -> None:
     # the members subparser has its own --today; the global --today (before
     # the subcommand) lands in global_today — honor either, subcommand wins
     today = getattr(args, "today", None) or args.global_today
+    if args.query == "lookup":
+        _serve_lookups(tables, sys.stdin, today)
+        return
     if args.query == "members":
         if args.uid is not None:
             df = M.member_by_uid(tables, args.uid, today=today)

@@ -223,7 +223,6 @@ def members(
 
 # The one members() extract keyed lookups filter, as (key, persisted frame);
 # see `lookup_extract`.
-_LOOKUP_INPUTS = ("member_search", "membership_paragraphs", "taxonomy", "clubs", "brns")
 _held: tuple[tuple, DataFrame] | None = None
 
 
@@ -248,13 +247,18 @@ def lookup_extract(
     """`members(tables, club, region, statuses, today)` persisted, built at
     the first keyed lookup for that catalog and parameter set and reused by
     every later one: a snapshot of the sources at that lookup. At most one
-    extract is held; preparing another key, or reopening the catalog
+    extract is held; preparing another key, or opening a catalog
     (`catalog.load_catalog`), releases it. `today=None` resolves to the UTC
-    date now, so no persisted plan carries `current_date()`."""
+    date now, so no persisted plan carries `current_date()`.
+
+    Spark's CacheManager serves every plan-equal plan from a cached one, so
+    while an extract is held every `members()` call in the process with the
+    same parameters over the same sources reads the snapshot too, the
+    members frame of a sync run (`run_mirror_sync_and_write`) included."""
     global _held
     statuses, today = tuple(statuses), today or utc_today()
     # DataFrames compare by identity, so the key names this opened catalog
-    key = (tuple(tables[t] for t in _LOOKUP_INPUTS), club, region, statuses, today)
+    key = (tuple(tables.items()), club, region, statuses, today)
     if _held is None or _held[0] != key:
         release_lookup_extract()
         _held = (key, members(tables, club, region, statuses, today).persist())

@@ -196,6 +196,24 @@ class TestPointLookups:
         load_catalog(spark, aci_dir)
         assert _persisted_rdds(spark) == base
 
+    def test_reopen_reads_changed_source(self, spark, tmp_path):
+        """Frames opened again over the same paths are plan-equal to the
+        old ones; once the source changed, reopening with `load_catalog`
+        must not leave them reading the old extract."""
+        import pandas as pd
+
+        d = str(tmp_path / "aci")
+        build_fixtures(d)
+        tables = load_catalog(spark, d)
+        assert M.member_by_uid(tables, 4, today=TODAY_S).count() == 1
+        path = os.path.join(d, "member_search.parquet")
+        search = pd.read_parquet(path)
+        search[search["user_id"] != 4].to_parquet(path, index=False)
+        reopened = load_catalog(spark, d)
+        assert 4 not in {r.user_id for r in M.members(reopened, today=TODAY_S).collect()}
+        assert M.member_by_uid(reopened, 4, today=TODAY_S).count() == 0
+        M.release_lookup_extract()
+
     def test_extract_survives_a_sync_run(self, spark, aci_dir, tmp_path):
         """A sync run on the same catalog and today shares the lookup
         extract's cache entry (plan-equal members() frame) and must leave it

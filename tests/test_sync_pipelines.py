@@ -373,6 +373,29 @@ class TestCli:
         # S7 null-skipping: absent optional fields are omitted, not null
         assert all(v is not None for r in rows for v in r.values())
 
+    def test_ddb_lookup_answers_each_stdin_key(self, spark, fixture_dir, monkeypatch):
+        """`ddb lookup` prints one JSON line per stdin key, the same member
+        `ddb members --uid` prints, and holds one extract for the session."""
+        from aci_export_spark.queries import members as M
+
+        M.release_lookup_extract()
+        base = spark.sparkContext._jsc.getPersistentRDDs().size()
+        keys = "4\n USER4@mail.test \n\n999999\nnobody@nowhere.test\n2\n"
+        monkeypatch.setattr(sys, "stdin", io.StringIO(keys))
+        out = self._run(["--data-dir", fixture_dir, "--today", TODAY_S, "ddb", "lookup"])
+        answers = [json.loads(line) for line in out.splitlines()]
+        assert [a["key"] for a in answers] == [
+            "4", "USER4@mail.test", "999999", "nobody@nowhere.test", "2"]
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == base + 1
+        assert answers[0]["member"]["user_id"] == 4
+        assert answers[1]["member"] == answers[0]["member"]
+        assert answers[2]["member"] is None and answers[3]["member"] is None
+        assert answers[4]["member"]["user_id"] == 2
+        one = self._run(["--data-dir", fixture_dir, "--today", TODAY_S,
+                         "ddb", "members", "--uid", "4"])
+        assert json.loads(one) == [answers[0]["member"]]
+        M.release_lookup_extract()
+
     def test_ddb_leadership_current(self, fixture_dir):
         out = self._run(
             ["--data-dir", fixture_dir, "ddb", "leadership",
