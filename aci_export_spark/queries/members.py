@@ -9,19 +9,26 @@ parameterized scope, matching the reference's semantics exactly:
   join ≤ today AND (leave IS NULL OR leave ≥ today − 1y) (:344-345); the
   *club/region* query uses join ≤ today AND (leave IS NULL OR leave ≥ today)
   (:393-395);
-- member existence requires ≥1 membership link (P6, :346-348);
+- member existence requires ≥1 membership link (P6, :346-348): an inner
+  join to the per-user pick;
 - users who are someone's partner are excluded as primary rows (P7, :349);
 - per-user pick = argmax join_date (A3, :421-430) with deterministic
   MIN-paragraph_id tie-break (the reference kept SQL ties — SURVEY §7.4.1);
 - member_type: any active home/intraclub link → regular, else affiliate
   (:201-206, 698-710; intraclub collapses into regular on the target side
-  :759-766);
+  :759-766); the flag (A1) is a window max in the same pass as the A3 pick;
 - member_status decode: 947/1099 → current, 951 → lapsed (:666-677);
 - member_class from taxonomy term name, default Regular (:603-634);
 - email-priority dedup LAST (A4, :41-55): regular beats affiliate, tie =
   lowest uid; runs after scope filtering (SURVEY §7.4.3);
 - partner synthesized from the search row's partner_* columns as a nested
   struct, NULL when no partner (:983-1022).
+
+Plan shape: the paragraphs are hash-partitioned on the user once, and the
+A2 window and the A1/A3 window both run on that partitioning, so a member
+query shuffles once per key (user, email). `clubs` is read once, as a
+broadcast dimension joined to the paragraphs before A2: the scope (J5) is a
+filter on that dimension and its columns ride through the pick.
 """
 
 from __future__ import annotations
@@ -46,9 +53,13 @@ def _today(today: str | None) -> Column:
     return F.lit(today).cast("date") if today else F.current_date()
 
 
-def membership_periods(tables: dict[str, DataFrame]) -> DataFrame:
-    """Cleaned membership periods: one row per (user, club, join_date, kind)
-    with member_type/member_class decoded. Reference :193-259."""
+def _periods(
+    tables: dict[str, DataFrame], clubs: DataFrame | None = None, how: str = "left"
+) -> DataFrame:
+    """Membership periods, hash-partitioned on the user. With `clubs` (a
+    dimension keyed `club_nid`) each paragraph is first joined to it, `how`
+    deciding whether a paragraph without a dimension row stays, and every
+    other dimension column is carried to the output."""
     paras = tables["membership_paragraphs"]
     taxonomy = tables["taxonomy"]
 
@@ -58,6 +69,17 @@ def membership_periods(tables: dict[str, DataFrame]) -> DataFrame:
         & F.col("join_date").isNotNull()
         & F.col("link_kind").isNotNull()
     )
+    club_cols = []
+    if clubs is not None:
+        # club_nid is an A2 key, so dropping rows by club here keeps A2 exact;
+        # the join runs before the shuffle, so a scoped query shuffles only
+        # the paragraphs of its scope
+        base = base.join(broadcast(clubs), on="club_nid", how=how)
+        club_cols = [c for c in clubs.columns if c != "club_nid"]
+    # the one shuffle on the user: a hash partitioning on parent_id satisfies
+    # the A2 window below (its keys include parent_id) and a caller's
+    # per-user windows, so neither adds an exchange
+    base = base.repartition("parent_id")
     # A2 dedupe-pick: keep MIN paragraph_id per natural key
     deduped = dedupe_keep_min(
         base, ["parent_id", "club_nid", "join_date", "link_kind"], "paragraph_id"
@@ -70,20 +92,22 @@ def membership_periods(tables: dict[str, DataFrame]) -> DataFrame:
     classes = taxonomy.filter(F.col("vid") == "membership_class").select(
         F.col("tid").alias("membership_class_tid"), F.col("name").alias("class_name")
     )
-    return (
-        deduped.join(broadcast(classes), on="membership_class_tid", how="left")
-        .withColumn("member_type", member_type)
-        .withColumn("member_class", F.coalesce(F.col("class_name"), F.lit("Regular")))
-        .select(
-            "paragraph_id",
-            F.col("parent_id").alias("user_uid"),
-            F.col("club_nid").alias("club_uid"),
-            F.to_date("join_date").alias("join_date"),
-            F.to_date("leave_date").alias("leave_date"),
-            "member_type",
-            "member_class",
-        )
+    return deduped.join(broadcast(classes), on="membership_class_tid", how="left").select(
+        "paragraph_id",
+        F.col("parent_id").alias("user_uid"),
+        F.col("club_nid").alias("club_uid"),
+        F.to_date("join_date").alias("join_date"),
+        F.to_date("leave_date").alias("leave_date"),
+        member_type.alias("member_type"),
+        F.coalesce(F.col("class_name"), F.lit("Regular")).alias("member_class"),
+        *club_cols,
     )
+
+
+def membership_periods(tables: dict[str, DataFrame]) -> DataFrame:
+    """Cleaned membership periods: one row per (user, club, join_date, kind)
+    with member_type/member_class decoded. Reference :193-259."""
+    return _periods(tables)
 
 
 def _active_periods(periods: DataFrame, today: Column, grace_months: int | None) -> DataFrame:
@@ -104,40 +128,49 @@ def members(
     today: str | None = None,
 ) -> DataFrame:
     """The member query, all three scopes (unscoped / club / region) from one
-    plan — the reference's UNION-IN scope pattern (J5, :381-392) as a
-    broadcast semi-join; P12 parameterization as function args."""
+    plan — the reference's UNION-IN scope pattern (J5, :381-392) as a filter
+    on the broadcast club dimension; P12 parameterization as function args."""
     search = tables["member_search"]
-    clubs = tables["clubs"]
     brns = tables["brns"]
-    periods = membership_periods(tables)
     t = _today(today)
 
-    scoped = club is not None or region is not None
-    if scoped:
-        # J5: scope = single club ∪ clubs-of-region, as one filter (a NULL
-        # parameter compares NULL and selects nothing); duplicate keys do not
-        # change a semi-join, so the scope needs no distinct
-        scope = clubs.filter(
-            (F.col("uid") == F.lit(club)) | (F.col("region_uid") == F.lit(region))
-        ).select(F.col("uid").alias("club_uid"))
-        periods = periods.join(broadcast(scope), on="club_uid", how="left_semi")
-        active = _active_periods(periods, t, grace_months=None)
+    club_dim = tables["clubs"].select(
+        F.col("uid").alias("club_nid"),
+        F.col("number").alias("club_number"),
+        F.col("name").alias("club_name"),
+        F.col("region_uid").alias("club_region"),
+    )
+    if club is not None or region is not None:
+        # J5: scope = single club ∪ clubs-of-region, as one filter on the
+        # dimension (a NULL parameter compares NULL and selects nothing). The
+        # inner join then drops paragraphs of clubs outside the scope, and
+        # of clubs `clubs` does not have at all.
+        club_dim = club_dim.filter(
+            (F.col("club_nid") == F.lit(club)) | (F.col("club_region") == F.lit(region))
+        )
+        active = _active_periods(_periods(tables, club_dim, "inner"), t, grace_months=None)
     else:
-        active = _active_periods(periods, t, grace_months=12)
+        active = _active_periods(_periods(tables, club_dim), t, grace_months=12)
 
-    # A1 flag + A3 argmax pick over the scope-filtered active periods
-    flags = active.groupBy(F.col("user_uid").alias("user_id")).agg(
-        (F.max(F.col("member_type").isin(*("regular", "intraclub")).cast("int")) == 1).alias(
-            "has_regular_link"
-        ),
+    # A1 flag + A3 argmax pick over the scope-filtered active periods, in one
+    # pass over the user partitioning
+    has_regular_link = F.max(F.col("member_type").isin("regular", "intraclub")).over(
+        Window.partitionBy("user_uid")
     )
     picked = argmax_per_key(
-        active, ["user_uid"], "join_date", tie_break=[F.col("paragraph_id").asc()]
+        active.withColumn("has_regular_link", has_regular_link),
+        ["user_uid"],
+        "join_date",
+        tie_break=[F.col("paragraph_id").asc()],
     ).select(
         F.col("user_uid").alias("user_id"),
-        F.col("club_uid").alias("picked_club_uid"),
-        F.col("member_class"),
-        F.col("join_date").alias("picked_join_date"),
+        "has_regular_link",
+        "member_class",
+        "join_date",
+        "club_uid",
+        "club_number",
+        "club_name",
+        "club_region",
     )
 
     # P4 status domain filter
@@ -148,10 +181,10 @@ def members(
     )
     # no broadcast hint: partner_ids derives from the fact table, so a forced
     # broadcast would blow up at scale — AQE picks broadcast at runtime when
-    # the distinct set is actually small
-    rows = rows.join(partner_ids.distinct(), on="user_id", how="left_anti")
-    # P6 membership-link existence + flags join (inner: must have ≥1 active link)
-    rows = rows.join(flags, on="user_id", how="inner").join(picked, on="user_id", how="inner")
+    # the set is actually small. Duplicate keys do not change an anti-join.
+    rows = rows.join(partner_ids, on="user_id", how="left_anti")
+    # P6 membership-link existence (inner: must have ≥1 active link)
+    rows = rows.join(picked, on="user_id", how="inner")
 
     member_type = F.when(F.col("has_regular_link"), "regular").otherwise("affiliate")
     member_status = (
@@ -159,12 +192,6 @@ def members(
         .when(F.col("personal_status_id").isin(*STATUS_LAPSED), "lapsed")
     )
 
-    club_dim = clubs.select(
-        F.col("uid").alias("picked_club_uid"),
-        F.col("number").alias("club_number"),
-        F.col("name").alias("club_name"),
-        F.col("region_uid").alias("club_region"),
-    )
     brn_arr = brns.select(
         F.col("user_id"), split_csv_trim(F.col("brns_values")).alias("brn_numbers")
     )
@@ -180,29 +207,25 @@ def members(
         ),
     ).alias("partner")
 
-    out = (
-        rows.join(broadcast(club_dim), on="picked_club_uid", how="left")
-        .join(brn_arr, on="user_id", how="left")
-        .select(
-            "user_id",
-            "email",
-            "first_name",
-            "last_name",
-            F.to_date("birthdate").alias("birthdate"),
-            member_status.alias("member_status"),
-            member_type.alias("member_type"),
-            F.col("member_class"),
-            F.col("picked_join_date").alias("join_date"),
-            F.to_date("membership_expire").alias("expiration_date"),
-            F.col("picked_club_uid").alias("club_uid"),
-            "club_number",
-            "club_name",
-            "club_region",
-            partner,
-            F.coalesce(F.col("brn_numbers"), F.array().cast("array<string>")).alias(
-                "brn_numbers"
-            ),
-        )
+    out = rows.join(brn_arr, on="user_id", how="left").select(
+        "user_id",
+        "email",
+        "first_name",
+        "last_name",
+        F.to_date("birthdate").alias("birthdate"),
+        member_status.alias("member_status"),
+        member_type.alias("member_type"),
+        "member_class",
+        "join_date",
+        F.to_date("membership_expire").alias("expiration_date"),
+        "club_uid",
+        "club_number",
+        "club_name",
+        "club_region",
+        partner,
+        F.coalesce(F.col("brn_numbers"), F.array().cast("array<string>")).alias(
+            "brn_numbers"
+        ),
     )
 
     # A4 email-priority dedup — AFTER scope filtering (SURVEY §7.4.3).
@@ -284,6 +307,9 @@ def membership_history(tables: dict[str, DataFrame], user_uid: int | None = None
     """Full per-user membership period history (reference :84-110, 193-259):
     the deduped periods, ordered; optionally one user's."""
     periods = membership_periods(tables)
-    if user_uid is not None:
-        periods = periods.filter(F.col("user_uid") == user_uid)
-    return periods.orderBy("user_uid", "join_date", "paragraph_id")
+    order = ("user_uid", "join_date", "paragraph_id")
+    if user_uid is None:
+        return periods.orderBy(*order)
+    # one user's few rows: sorted in one partition, with no range-partition
+    # sampling job for a global sort
+    return periods.filter(F.col("user_uid") == user_uid).coalesce(1).sortWithinPartitions(*order)

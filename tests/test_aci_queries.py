@@ -5,9 +5,11 @@ deterministic fixtures — the correctness harness the reference never had
 from __future__ import annotations
 
 import os
+import re
 import subprocess
 import sys
 import textwrap
+from datetime import timedelta
 from pathlib import Path
 
 import pytest
@@ -17,7 +19,7 @@ from aci_export_spark.queries import members as M
 from aci_export_spark.queries import leadership as L
 from aci_export_spark.queries import entities as E
 from aci_export_spark.queries.catalog import load_catalog
-from tests.aci_fixtures import build_fixtures, TODAY
+from tests.aci_fixtures import build_fixtures, CLASS_LIFETIME_TID, TODAY
 
 REPO = str(Path(__file__).resolve().parents[1])
 
@@ -113,6 +115,92 @@ class TestMembers:
         assert M.member_by_uid(aci, 4, today=TODAY_S).count() == 1
         got = M.member_by_email(aci, "user4@mail.test", today=TODAY_S).collect()
         assert len(got) == 1 and got[0].user_id == 4
+
+    @staticmethod
+    def _uids(tables, **scope) -> set[int]:
+        return {r.user_id for r in M.members(tables, today=TODAY_S, **scope).collect()}
+
+    def test_region_scope(self, aci):
+        # region 2 = clubs 1, 4 and 7 (region_uid = 1 + uid % 3); uid 22
+        # (club 7) left 100 days ago and is outside the strict window, and
+        # club 4's users all have an out-of-domain status
+        assert self._uids(aci, region=2) == {8, 14, 16, 21, 24, 30, 32, 40}
+
+    def test_club_and_region_scope_is_a_union(self, aci):
+        club5 = self._uids(aci, club=5)
+        region1 = self._uids(aci, region=1)  # clubs 3 and 6
+        assert club5 == {4, 9, 12, 20, 33, 36, 38}
+        assert region1 == {2, 5, 10, 13, 18, 21, 26, 29, 34, 37, 40}
+        # the A4 email dedup runs on the union: regular uid 2 (club 3) beats
+        # affiliate uid 38 (club 5), which shares its email
+        assert self._uids(aci, club=5, region=1) == (club5 | region1) - {38}
+
+    def test_club_missing_from_clubs_is_in_no_scope(self, aci):
+        # club 3's paragraphs stay, its clubs row is gone: no scope reaches
+        # them, and the unscoped query keeps them without club columns
+        tables = dict(aci, clubs=aci["clubs"].filter(F.col("uid") != 3))
+        assert self._uids(tables, club=3) == set()
+        assert self._uids(tables, region=1) == {5, 13, 18, 21, 29, 37, 40}  # club 6
+        row = M.members(tables, today=TODAY_S).filter(F.col("user_id") == 2).collect()[0]
+        assert (row.club_uid, row.club_number, row.club_name, row.club_region) == (
+            3, None, None, None)
+
+    def test_dedupe_pick_runs_before_liveness(self, spark, aci):
+        """A2 keeps the MIN paragraph_id row of a duplicate key before the
+        liveness windows see it: an open duplicate with a higher id never
+        stands in for a MIN row that has left, and the MIN row's class
+        decides. uid 14 (club 7) and uid 26 (club 3) each get one such pair
+        in place of their fixture paragraphs."""
+        paras = aci["membership_paragraphs"]
+
+        def pair(uid, club, min_leave, min_class):
+            key = dict(parent_id=uid, ptype="membership", status=1, club_nid=float(club),
+                       join_date="2020-03-01", link_kind="field_home_club")
+            return [
+                dict(key, paragraph_id=uid, leave_date=min_leave, membership_class_tid=min_class),
+                dict(key, paragraph_id=10**6 + uid, leave_date=None, membership_class_tid=None),
+            ]
+
+        extra = spark.createDataFrame(
+            pair(14, 7, (TODAY - timedelta(days=730)).isoformat(), None)
+            + pair(26, 3, (TODAY - timedelta(days=100)).isoformat(), float(CLASS_LIFETIME_TID)),
+            schema=paras.schema,
+        )
+        tables = dict(aci, membership_paragraphs=paras.filter(
+            ~F.col("parent_id").isin(14, 26)).unionByName(extra))
+
+        unscoped = {r.user_id: r for r in M.members(tables, today=TODAY_S).collect()}
+        # uid 14's MIN row left two years ago, outside even the 1y grace window
+        assert 14 not in unscoped
+        # uid 26's MIN row left 100 days ago: inside the grace window, with
+        # its class; outside the club query's strict window
+        assert unscoped[26].member_class == "Lifetime"
+        assert str(unscoped[26].join_date) == "2020-03-01"
+        assert 14 not in self._uids(tables, club=7)
+        assert 26 not in self._uids(tables, club=3)
+        assert [r.paragraph_id for r in M.membership_history(tables, user_uid=26).collect()] == [26]
+
+    def test_one_shuffle_per_key_and_one_read_of_clubs(self, aci):
+        # AQE's initial plan, before any stage has run: one hash exchange on
+        # the user (the paragraphs' partitioning, shared by the A2 and A1/A3
+        # windows) and one on the email key (A4); `clubs` scanned once. A held
+        # lookup extract would serve the unscoped plan from its cache.
+        M.release_lookup_extract()
+        for scope in ({}, {"club": 3}, {"region": 2}):
+            df = M.members(aci, today=TODAY_S, **scope)
+            plan = df._jdf.queryExecution().executedPlan().initialPlan().toString()
+            exchanges = re.findall(r"Exchange hashpartitioning\((\w+)#", plan)
+            assert len(exchanges) == 2 and "parent_id" in exchanges, (scope, exchanges)
+            clubs_scans = [ln for ln in plan.splitlines()
+                           if "FileScan" in ln and "/clubs.parquet" in ln]
+            assert len(clubs_scans) == 1, (scope, clubs_scans)
+
+    def test_keyed_history_sorts_in_one_partition(self, aci):
+        df = M.membership_history(aci, user_uid=24)
+        plan = df._jdf.queryExecution().executedPlan().initialPlan().toString()
+        assert "rangepartitioning" not in plan
+        rows = [(r.join_date, r.paragraph_id) for r in df.collect()]
+        assert len(rows) > 1 and rows == sorted(rows)
 
 
 def _rows(df) -> list[dict]:
