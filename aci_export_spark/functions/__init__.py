@@ -6,7 +6,7 @@ it re-expresses.
 """
 
 from aci_export_spark.functions.ids import id_for_email, md5_member_id
-from aci_export_spark.functions.dates import epoch_to_date, active_window, as_of_predicate
+from aci_export_spark.functions.dates import epoch_to_date, as_of_predicate
 from aci_export_spark.functions.text import (
     normalize_text,
     tokens,
@@ -20,7 +20,6 @@ __all__ = [
     "id_for_email",
     "md5_member_id",
     "epoch_to_date",
-    "active_window",
     "as_of_predicate",
     "normalize_text",
     "tokens",

@@ -28,16 +28,6 @@ def epoch_to_date(epoch_seconds: Column) -> Column:
     return F.to_date(F.from_unixtime(epoch_seconds))
 
 
-def active_window(join_date: Column, leave_date: Column, months_grace: int = 12) -> Column:
-    """The *all-members* liveness predicate (reference P5 variant 1,
-    `ddb/src/members.rs:344-345`): joined by today, left within the last
-    `months_grace` months (or still active). NULL leave = open."""
-    today = F.current_date()
-    return (join_date <= today) & (
-        leave_date.isNull() | (leave_date >= F.add_months(today, -months_grace))
-    )
-
-
 def as_of_predicate(start: Column, end: Column, as_of: Column | None = None) -> Column:
     """Interval membership at probe date (reference J10,
     `ddb/src/leadership.rs:95-122` and P5 variant 2 `ddb/src/members.rs:393-395`):

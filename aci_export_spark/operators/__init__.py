@@ -11,7 +11,7 @@ from aci_export_spark.operators.dedup import (
     argmax_per_key,
     priority_dedup,
 )
-from aci_export_spark.operators.joins import scoped_semi_join, coalesce_key_join
+from aci_export_spark.operators.joins import scoped_semi_join
 from aci_export_spark.operators.mirror import upsert, retain, mirror_sync
 
 __all__ = [
@@ -19,7 +19,6 @@ __all__ = [
     "argmax_per_key",
     "priority_dedup",
     "scoped_semi_join",
-    "coalesce_key_join",
     "upsert",
     "retain",
     "mirror_sync",

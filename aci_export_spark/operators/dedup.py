@@ -71,12 +71,3 @@ def priority_dedup(
     order = [priority.asc()] + list(tie_break or [])
     return _pick_first(df, keys, order)
 
-
-def exact_dedup(df: DataFrame, on: Column, id_col: str, keep: str = "min") -> DataFrame:
-    """Exact content dedup: group rows by a derived key column (e.g. md5 of
-    normalized text) and keep the min/max id. Beyond-reference operator for
-    corpus dedup; the groupBy key is a hash so the shuffle is uniform even
-    when document sizes are skewed.
-    """
-    order = [F.col(id_col).asc() if keep == "min" else F.col(id_col).desc()]
-    return _pick_first(df.withColumn("__key", on), ["__key"], order).drop("__key")

@@ -1,16 +1,16 @@
 """Join-shaped operators (reference J1-J14; SURVEY.md §2.3).
 
 Plain equi-joins stay as `df.join(...)` at call sites — Catalyst handles them.
-What lives here are the *patterns* the reference built by hand: scope
-semi-joins, coalesced-key joins, IN-list lookups, existence flags. Each is
-written so the small side broadcasts (no shuffle of the fact table).
+What lives here is the scope semi-join the reference built by hand, written
+so the small side broadcasts (no shuffle of the fact table), and a salted
+join for hot keys.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
@@ -24,66 +24,6 @@ def scoped_semi_join(facts: DataFrame, scope: DataFrame, on: str | Sequence[str]
     filtered in place with zero shuffle.
     """
     return facts.join(broadcast(scope), on=on, how="left_semi")
-
-
-def anti_scope_join(facts: DataFrame, exclusions: DataFrame, on: str | Sequence[str]) -> DataFrame:
-    """facts ∉ exclusions (reference J6/P7 partner exclusion,
-    `ddb/src/members.rs:327,349`). Broadcast anti-join."""
-    return facts.join(broadcast(exclusions), on=on, how="left_anti")
-
-
-def in_list_lookup(facts: DataFrame, keys: Sequence, key_col: str, spark=None) -> DataFrame:
-    """Lookup join driven by an explicit key list (reference J8,
-    `ddb/src/members.rs:538-558`: `WHERE entity_id IN (…)`).
-
-    For small lists Catalyst turns `isin` into an in-set predicate pushed to
-    the scan — better than any join. Callers with a large/DataFrame-valued
-    key set should use `scoped_semi_join` instead.
-    """
-    return facts.filter(F.col(key_col).isin(list(keys)))
-
-
-def coalesce_key_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_keys: Sequence[str],
-    right_key: str,
-    how: str = "inner",
-) -> DataFrame:
-    """Join on COALESCE(left_keys...) = right_key (reference J4,
-    `ddb/src/leadership.rs:85-87`: person = COALESCE(field_user, field_member)).
-
-    The coalesced key is materialized as a column first so the join stays a
-    hash-partitionable equi-join (a raw COALESCE inside the condition would
-    too, but a named column keeps the plan and downstream selects readable).
-    """
-    lk = F.coalesce(*[left[c] for c in left_keys])
-    keyed = left.withColumn("__join_key", lk)
-    out = keyed.join(right, keyed["__join_key"] == right[right_key], how=how)
-    return out.drop("__join_key")
-
-
-def existence_flags(
-    spine: DataFrame,
-    spine_key: str,
-    links: dict[str, tuple[DataFrame, str]],
-) -> DataFrame:
-    """LEFT-join N link tables, emit one boolean flag per table (reference J7,
-    `ddb/src/members.rs:224-232,333-338`).
-
-    Each link table is reduced to distinct keys *before* the join (semi-join
-    shape), so flags cannot duplicate spine rows and the per-link shuffle is
-    on deduplicated keys only.
-    """
-    out = spine
-    for flag_name, (link_df, link_key) in links.items():
-        keys = link_df.select(F.col(link_key).alias(spine_key)).distinct().withColumn(
-            f"__{flag_name}", F.lit(True)
-        )
-        out = out.join(keys, on=spine_key, how="left").withColumn(
-            flag_name, F.coalesce(F.col(f"__{flag_name}"), F.lit(False))
-        ).drop(f"__{flag_name}")
-    return out
 
 
 def salted_join(

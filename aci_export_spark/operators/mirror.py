@@ -12,15 +12,15 @@ Spark-first equivalents, as pure DataFrame algebra so they work on any sink:
     retain(target, keep, keys)    = target ⋉ keep                    (semi-join)
     mirror_sync                   = upsert ∘ retain
 
-`mirror_sync_observed` computes the same post-state with the reference's
-per-entity stats {upserted, deleted} attached, counted by the one job that
-writes it (`sync/app_sync.run_mirror_sync_and_write` overwrites a plain
-parquet mirror with it). On a transactional table format (Delta/Iceberg) the
-same semantics are a single `MERGE INTO … WHEN MATCHED UPDATE / WHEN NOT
-MATCHED INSERT / WHEN NOT MATCHED BY SOURCE DELETE` (`delta_mirror_sync`).
-At 100 TB the anti/semi joins shuffle on the mirror key — the same key the
-table should be bucketed by (`write_bucketed_mirror`), making them
-co-located joins.
+Two write paths use this algebra:
+
+- `mirror_sync_observed` is the post-state (≡ source) with the reference's
+  per-entity stats {upserted, deleted} attached, counted by the one job that
+  writes it (`sync/app_sync.run_mirror_sync_and_write` overwrites a plain
+  parquet mirror with it). Like the reference's delete-missing step it reads
+  only the target's keys.
+- `JdbcMirror` runs the reference's own transactional statements
+  (`jdbc_merge_sql`) against a SQL database such as Postgres.
 """
 
 from __future__ import annotations
@@ -46,8 +46,7 @@ def retain(target: DataFrame, keep_keys: DataFrame, keys: Sequence[str]) -> Data
     """Delete-missing: keep only target rows whose key appears in `keep_keys`.
 
     Reference S9 (`db/src/lib.rs:16-76`): temp table of keys + `DELETE …
-    WHERE key NOT IN (…)` in one txn. Here: a semi-join (MERGE … WHEN NOT
-    MATCHED BY SOURCE THEN DELETE on Delta).
+    WHERE key NOT IN (…)` in one txn. Here: a semi-join.
     """
     return target.join(keep_keys.select(*keys).distinct(), on=list(keys), how="left_semi")
 
@@ -56,78 +55,6 @@ def mirror_sync(target: DataFrame, source: DataFrame, keys: Sequence[str]) -> Da
     """Full mirror semantics: after this, target ≡ source keyset with source
     values (upsert + retain composed; reference §3.2 steps 5-6)."""
     return retain(upsert(target, source, keys), source, keys)
-
-
-def write_bucketed_mirror(
-    df: DataFrame,
-    table_name: str,
-    keys: Sequence[str],
-    num_buckets: int = 32,
-    path: str | None = None,
-) -> None:
-    """Materialize a mirror table hash-bucketed (and sorted) by its key.
-
-    This is the 100 TB layout: when both sides of the next sync's
-    upsert/retain join are bucketed by the same key with the same bucket
-    count, Spark plans a co-located sort-merge join with NO Exchange — the
-    mirror side (the big one) is never shuffled again. Verified by
-    `TestBucketedMirror` (asserts zero Exchange operators in the join plan).
-    """
-    writer = (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(num_buckets, *keys)
-        .sortBy(*keys)
-    )
-    if path is not None:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table_name)
-
-
-def delta_available() -> bool:
-    """True when the delta-spark package is importable. The sandbox does not
-    ship it (``pip install delta-spark`` re-attempted 2026-08-16 in rounds
-    7, 8, 9, 10 and 11: DNS resolution fails against every index — no network
-    route), so the Delta paths are gated rather than assumed."""
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def delta_mirror_sync(spark, source: DataFrame, target_path: str, keys: Sequence[str]):
-    """S8/S9 on a transactional table: ONE ``MERGE INTO`` with
-    ``WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT / WHEN NOT MATCHED BY
-    SOURCE DELETE`` — the idiomatic Delta statement of exactly the
-    upsert+retain algebra :func:`mirror_sync` computes (SURVEY §2 names this
-    as the preferred target, with plain-parquet overwrite-diff as the
-    sanctioned fallback). Readers never observe a half-synced mirror: the
-    merge is a single atomic commit, the property the reference gets from
-    its one-transaction Postgres merge (`db/src/lib.rs:16-76`).
-
-    Requires delta-spark (gate with :func:`delta_available`); bootstrap
-    writes the initial snapshot when `target_path` is not yet a Delta table.
-    At 100 TB the merge shuffles on the mirror key like the DataFrame
-    algebra — co-locate with a key-partitioned layout and enable deletion
-    vectors so the delete half is metadata-only.
-    """
-    from delta.tables import DeltaTable  # ImportError = env lacks delta-spark
-
-    if not DeltaTable.isDeltaTable(spark, target_path):
-        source.write.format("delta").save(target_path)
-        return
-    cond = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-    (
-        DeltaTable.forPath(spark, target_path)
-        .alias("t")
-        .merge(source.alias("s"), cond)
-        .whenMatchedUpdateAll()
-        .whenNotMatchedInsertAll()
-        .whenNotMatchedBySourceDelete()
-        .execute()
-    )
 
 
 def jdbc_merge_sql(
@@ -235,9 +162,12 @@ def mirror_sync_observed(
     materializing action instead of two extra count() jobs over the same
     inputs.
 
-    The post-state = deleted-target-rows ∪ source, tagged; observe() sums
-    the tags during whatever action materializes the frame (the mirror
-    write), then the tag column is dropped. Usage::
+    The post-state is the source. The deleted keys (target keys absent from
+    the source, reference `db/src/lib.rs:16-76`) ride along with it, tagged,
+    so observe() counts both classes during whatever action materializes
+    the frame (the mirror write); then they are filtered back out. The
+    target is read for its keys only, and the post-state keeps the source's
+    schema. Usage::
 
         post, obs = mirror_sync_observed(target, source, keys)
         post.write.parquet(...)           # one job
@@ -245,16 +175,15 @@ def mirror_sync_observed(
     """
     from pyspark.sql import Observation
 
-    # mirror post-state ≡ source; deleted = target keys absent from source.
-    # The deleted rows ride along tagged so the observation counts both
-    # classes in the single output pass, then they are filtered back out.
-    deleted_count_src = target.select(*keys).distinct().join(
-        source.select(*keys).distinct(), on=list(keys), how="left_anti"
+    deleted = (
+        target.select(*keys).distinct()
+        .join(source.select(*keys), on=list(keys), how="left_anti")
+        # in the source's key types; the union fills the other columns with
+        # NULLs of the source's types
+        .select(*[F.col(k).cast(source.schema[k].dataType).alias(k) for k in keys])
     )
     tagged = source.withColumn("__is_upsert", F.lit(1)).unionByName(
-        deleted_count_src.join(target, on=list(keys))  # deleted rows, full width
-        .select(*source.columns)
-        .withColumn("__is_upsert", F.lit(0))
+        deleted.withColumn("__is_upsert", F.lit(0)), allowMissingColumns=True
     )
     obs = Observation("mirror_stats")
     observed = tagged.observe(
@@ -262,7 +191,5 @@ def mirror_sync_observed(
         F.sum("__is_upsert").alias("upserted"),
         F.sum(1 - F.col("__is_upsert")).alias("deleted"),
     )
-    # post-state excludes the deleted rows again — they were only carried so
-    # the observation sees them in the same pass
     post = observed.filter(F.col("__is_upsert") == 1).drop("__is_upsert")
     return post, obs

@@ -83,9 +83,8 @@ def leadership_by_number(
 
 def dedup_for_upsert(lead: DataFrame) -> DataFrame:
     """A7: drop duplicate (entity, person, role, start) natural keys before a
-    mirror write, deterministically (keep lowest end_date-null-last … here:
-    arbitrary-free via coalesced end_date ordering is overkill — the natural
-    key fully determines the reference row, so keep the first by end_date)."""
+    mirror write. Per natural key it keeps the row with the earliest
+    end_date; an open (NULL) end_date counts as the latest."""
     keyed = lead.withColumn(
         "__end_key", F.coalesce(F.col("end_date"), F.lit("9999-12-31").cast("date"))
     )
@@ -102,7 +101,7 @@ def filter_to_existing_entities(
 ) -> DataFrame:
     """J12 referential-integrity filter: drop leadership rows whose entity has
     no dimension row (reference sync-app/src/sync.rs:541-590 warns per miss;
-    we return both streams so callers can count/log the drops)."""
-    keys = dim.select(F.col(dim_key).alias("entity_uid")).distinct()
-    kept = lead.join(keys, on="entity_uid", how="left_semi")
-    return kept
+    the dropped rows are not returned). A semi-join ignores duplicate
+    dimension keys, so they are not deduplicated first."""
+    keys = dim.select(F.col(dim_key).alias("entity_uid"))
+    return lead.join(keys, on="entity_uid", how="left_semi")

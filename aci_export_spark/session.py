@@ -24,8 +24,6 @@ from contextlib import contextmanager
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def get_spark(
     app_name: str = "aci-export-spark",
@@ -45,7 +43,7 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -62,10 +60,7 @@ def get_spark(
         # 5000 (-22% wall, -38% CPU), with per-query numbers unchanged in
         # shape. Size is driver-memory-bounded (compiled classes, ~10-100
         # KB each); 5000 covers ~300 queries x ~15 codegen units.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "5000"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", "5000")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # Scan-split floor. The 4 MiB default models HDFS-era per-file open
         # cost; it also means any table under ~4 MiB x cores scans as a
@@ -74,12 +69,9 @@ def get_spark(
         # storage a parquet open is far cheaper than 4 MiB of reads; 256 KiB
         # keeps small-file scans parallel while maxPartitionBytes still
         # bounds split counts on real lakes. 60-query A/B at sf0.1:
-        # 66.9 -> 59.3 s wall (-11%) at flat CPU. Env-tunable for
-        # deployments with genuinely slow file opens.
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_GRAFT_OPEN_COST", str(256 * 1024)),
-        )
+        # 66.9 -> 59.3 s wall (-11%) at flat CPU. A deployment with
+        # genuinely slow file opens raises it through `extra_conf`.
+        .config("spark.sql.files.openCostInBytes", str(256 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"))

@@ -1,4 +1,4 @@
-"""Table sources and scope builders.
+"""Table sources.
 
 Reference counterpart: `ddb/src/lib.rs:21-33` (MySQL pool) and the per-query
 base relations. In Spark a "source" is a lazily-scanned DataFrame; predicate
@@ -53,16 +53,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TEST_TABLES) -> dict[str, DataFrame]:
-    return {n: read_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TEST_TABLES) -> None:
-    """Register the test tables as temp views so `spark.sql` parity queries run."""
-    for n in names:
-        read_table(spark, sf_dir, n).createOrReplaceTempView(n)
-
-
 def read_jdbc_table(
     spark: SparkSession,
     url: str,
@@ -99,16 +89,6 @@ def read_jdbc_table(
     for k, v in options.items():
         reader = reader.option(k, v)
     return reader.load()
-
-
-def scope_union(primary: DataFrame, expansion: DataFrame) -> DataFrame:
-    """Scope DF = single-key set ∪ expansion set (reference J5/U1 pattern,
-    `ddb/src/members.rs:381-392`): one plan serves point-scope, group-scope,
-    and unscoped queries. Callers left-semi-join facts against this — at scale
-    the scope side is tiny, so Catalyst broadcasts it and no fact shuffle
-    happens.
-    """
-    return primary.unionByName(expansion).distinct()
 
 
 def read_jsonl(

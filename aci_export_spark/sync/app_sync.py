@@ -13,10 +13,11 @@ consolidation from it and persists that too. The person-keyed sources
 the members pipeline runs once per run instead of once per consumer. Both are
 released when the run ends, also when it fails.
 
-Target tables are plain-parquet mirrors here (a Delta/Iceberg deployment
-would use MERGE INTO with identical semantics — operators/mirror.py). The
-person key for every person-keyed target table is the email-derived
-synthetic id (db/src/user.rs:31-35) via `id_for_email`.
+Target tables are plain-parquet mirrors, `<mirror_dir>/<name>.parquet`; the
+diff reads only their keys (`mirror_sync_observed`). The reference's own
+transactional target, Postgres, is `operators/mirror.JdbcMirror`. The person
+key for every person-keyed target table is the email-derived synthetic id
+(db/src/user.rs:31-35) via `id_for_email`.
 """
 
 from __future__ import annotations
@@ -160,24 +161,23 @@ def run_mirror_sync_and_write(
 
     `today` defaults to the UTC date at run start; the run's one `members()`
     frame and its `users` consolidation are cached for the run and released
-    at its end (module docstring). Each table writes to a temp dir first —
-    the post-state plan reads the live mirror files, so an in-place overwrite
-    would truncate its own input mid-scan. Returns the per-entity stats map.
+    at its end (module docstring). A table not yet in `mirror_dir` (first
+    run) diffs against an empty frame of the source's schema. Each table
+    writes to a temp dir first — the post-state plan reads the live mirror's
+    keys, so an in-place overwrite would truncate its own input mid-scan.
+    Returns the per-entity stats map.
     """
     today = today or utc_today()
-    targets = load_targets(spark, mirror_dir)
     with persisted(M.members(tables, today=today)) as mem, \
             persisted(extract_users(tables, mem)) as users:
         sources = _build_sources(tables, mem, users)
         stats: dict[str, dict] = {}
         for name in LOAD_ORDER:
             src, keys = sources[name]
-            tgt = targets.get(name)
-            if tgt is None:  # first run: empty mirror with the source schema
-                tgt = src.limit(0)
+            path = os.path.join(mirror_dir, f"{name}.parquet")
+            tgt = spark.read.parquet(path) if os.path.exists(path) else src.limit(0)
             t0 = time.perf_counter()
             post, obs = mirror_ops.mirror_sync_observed(tgt, src, keys)
-            path = os.path.join(mirror_dir, f"{name}.parquet")
             tmp = path + ".tmp"
             post.write.mode("overwrite").parquet(tmp)
             if os.path.exists(path):
@@ -191,12 +191,3 @@ def run_mirror_sync_and_write(
             }
     return stats
 
-
-def load_targets(spark, mirror_dir: str) -> dict[str, DataFrame | None]:
-    """Read the current mirror state; None for tables not yet materialized
-    (first run — run_mirror_sync_and_write substitutes an empty frame)."""
-    out: dict[str, DataFrame | None] = {}
-    for name in LOAD_ORDER:
-        path = os.path.join(mirror_dir, f"{name}.parquet")
-        out[name] = spark.read.parquet(path) if os.path.exists(path) else None
-    return out

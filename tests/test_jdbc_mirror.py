@@ -91,48 +91,3 @@ def test_jdbc_merge_sql_composite_keys_and_writer_config():
         JdbcMirror(executor=lambda s: None)
     with pytest.raises(ValueError):
         JdbcMirror(url="jdbc:postgresql://h/db")
-
-
-def test_delta_mirror_sync_gated_or_equivalent(spark, tmp_path):
-    """When delta-spark is importable, MERGE INTO post-state must equal the
-    DataFrame-algebra mirror_sync; otherwise the Delta path must be cleanly
-    gated (ImportError), not half-work."""
-    from aci_export_spark.operators.mirror import (
-        delta_available,
-        delta_mirror_sync,
-        mirror_sync,
-    )
-
-    target_rows = [(1, "a@x", "active"), (2, "b@x", "blocked"), (3, "c@x", "active")]
-    source_rows = [(2, "b@new", "active"), (4, "d@x", "active")]
-    schema = "id long, email string, status string"
-    target = spark.createDataFrame(target_rows, schema)
-    source = spark.createDataFrame(source_rows, schema)
-    expected = sorted(tuple(r) for r in mirror_sync(target, source, ["id"]).collect())
-
-    path = str(tmp_path / "delta_mirror")
-    if not delta_available():
-        with pytest.raises(ImportError):
-            delta_mirror_sync(spark, source, path, ["id"])
-        pytest.skip(
-            "delta-spark not installed in this environment (install "
-            "re-attempted 2026-08-15: `pip install delta-spark` fails with "
-            "DNS resolution errors — the sandbox has no network route to "
-            "any index). To lift the "
-            "gate: `pip install delta-spark` (matching the pyspark 4.x "
-            "line), add "
-            "spark.jars.packages=io.delta:delta-spark_2.13:<version>, "
-            "spark.sql.extensions=io.delta.sql.DeltaSparkSessionExtension "
-            "and spark.sql.catalog.spark_catalog=org.apache.spark.sql."
-            "delta.catalog.DeltaCatalog to the session, then re-run THIS "
-            "test — it bootstraps a Delta table, MERGEs the source in, and "
-            "asserts post-state equality with the DataFrame-algebra "
-            "mirror_sync; no other change is needed."
-        )
-    # bootstrap with the pre-state, then merge the source in
-    delta_mirror_sync(spark, target, path, ["id"])
-    delta_mirror_sync(spark, source, path, ["id"])
-    got = sorted(
-        tuple(r) for r in spark.read.format("delta").load(path).collect()
-    )
-    assert got == expected

@@ -194,33 +194,6 @@ class TestPagedRestSource:
         assert {r["id"] for r in rows} == set(range(total))
 
 
-class TestBucketedMirror:
-    def test_bucketed_join_has_no_exchange(self, spark, tmp_path):
-        """Two mirrors bucketed on the same key join with zero shuffles —
-        the layout that keeps the 100 TB side in place across syncs."""
-        from aci_export_spark.operators.mirror import write_bucketed_mirror
-
-        a = spark.range(10_000).selectExpr("id AS k", "id * 2 AS va")
-        b = spark.range(5_000).selectExpr("id AS k", "id * 3 AS vb")
-        write_bucketed_mirror(a, "bk_a", ["k"], num_buckets=8, path=str(tmp_path / "a"))
-        write_bucketed_mirror(b, "bk_b", ["k"], num_buckets=8, path=str(tmp_path / "b"))
-        old_threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try:
-            # disable broadcast so the join exercises the big-big path the
-            # bucketing exists for (at 100 TB neither mirror side broadcasts)
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            joined = spark.table("bk_a").join(spark.table("bk_b"), on="k")
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            assert "Exchange hashpartitioning" not in plan, plan
-            assert "SortMergeJoin" in plan
-            assert "Bucketed: true" in plan
-            assert joined.count() == 5_000
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_threshold)
-            spark.sql("DROP TABLE IF EXISTS bk_a")
-            spark.sql("DROP TABLE IF EXISTS bk_b")
-
-
 class TestObservedMirrorStats:
     def test_stats_come_with_the_write(self, spark, tmp_path):
         from aci_export_spark.operators.mirror import mirror_sync, mirror_sync_observed
@@ -236,6 +209,45 @@ class TestObservedMirrorStats:
         want = mirror_sync(target, source, ["k"])
         assert sorted(map(tuple, spark.read.parquet(str(tmp_path / "m.parquet")).collect())) == \
                sorted(map(tuple, want.collect()))
+
+    def test_post_state_keeps_the_source_schema(self, spark, tmp_path):
+        """A mirror whose stored key is double (a pandas integer column that
+        held None, as in tests/aci_fixtures.py) synced from a bigint-keyed
+        source is written with the source's types, not widened to the old
+        mirror's."""
+        from aci_export_spark.operators.mirror import mirror_sync_observed
+
+        path = str(tmp_path / "old.parquet")
+        spark.createDataFrame(
+            [(float(k), f"old{k}") for k in range(5, 15)], "k double, v string"
+        ).write.parquet(path)
+        target = spark.read.parquet(path)                                  # 5..14
+        source = spark.createDataFrame([(k, f"new{k}") for k in range(10)],
+                                       "k bigint, v string")               # 0..9
+        post, obs = mirror_sync_observed(target, source, ["k"])
+        assert post.schema == source.schema
+        post.write.parquet(str(tmp_path / "new.parquet"))
+        assert obs.get == {"upserted": 10, "deleted": 5}
+
+    def test_diff_reads_only_the_target_keys(self, spark, tmp_path):
+        """The delete-missing diff scans the target once, for its keys only
+        (reference `db/src/lib.rs:16-76` never reads target rows)."""
+        from aci_export_spark.operators.mirror import mirror_sync_observed
+
+        path = str(tmp_path / "mirror.parquet")
+        spark.range(100).selectExpr(
+            "id AS k", "id AS k2", "CAST(id AS string) AS wide", "id * 2 AS v"
+        ).write.parquet(path)
+        target = spark.read.parquet(path)
+        source = spark.createDataFrame(
+            [(k, k, str(k), 3 * k) for k in range(50, 130)],
+            "k bigint, k2 bigint, wide string, v bigint",
+        )
+        post, _ = mirror_sync_observed(target, source, ["k", "k2"])
+        plan = post._jdf.queryExecution().executedPlan().toString()
+        scans = [line for line in plan.splitlines() if "FileScan parquet" in line]
+        assert len(scans) == 1, plan
+        assert "ReadSchema: struct<k:bigint,k2:bigint>" in scans[0], scans[0]
 
 
 class TestPartitionPruning:
