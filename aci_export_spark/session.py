@@ -1,15 +1,48 @@
-"""SparkSession factory tuned for the engine's workload shape.
+"""SparkSession factory for the engine's deployed shape: one-shot,
+driver-bound jobs.
 
 The reference runs single-process (SURVEY.md §4); we instead declare plans and
-let Catalyst/AQE pick physical strategy. The defaults below are the ones that
-matter at 100 TB:
+let Catalyst/AQE pick physical strategy. Every ACI entry point is a one-shot
+process: `sync-app run` and `sync-mail run` run once per deploy, and the `ddb`
+CLI once per command or per stdin batch. Their driver JVM lives for seconds,
+and their cost is Spark job count and driver-side planning, not data. The
+defaults below serve that shape:
 
-- AQE on (runtime coalesce + skew-join splitting) so a plan tuned at sf0.1
-  survives a 1000x scale-up without hand-retuning shuffle partition counts.
+- The driver JVM compiles with C1 only (`-XX:TieredStopAtLevel=1`, set as
+  `spark.driver.defaultJavaOptions`, which Spark puts before a caller's
+  `spark.driver.extraJavaOptions`, so those are kept). A young JVM keeps
+  compiling Spark's planner code with C2 and exits before that work pays
+  back: on a loop of ddb lookups over the test fixtures (4 vCPU,
+  `local[4]`), the compiler threads took 37% of the JVM's CPU with tiered
+  C2 and 12% with C1 only. C1 alone would get the JVM's 48 MB non-tiered
+  code cache, which a 60 s lookup loop fills in about 25 s, and a full
+  cache stops all compiling; `-XX:ReservedCodeCacheSize=240m` keeps the
+  tiered default. Measured with perfbench (4 vCPU, tiered C2 -> these
+  options, medians of alternating pairs): `cpu_ms_per_op` 362 -> 167 ms on
+  `aci_ddb_lookup` (10 pairs) and 14.6 -> 6.9 s on `aci_sync_app` (6
+  pairs); set-up time and peak RSS were lower on both.
+  The trade-off: a long-lived JVM earns C2 back. In a 60 s lookup window
+  C1 still used less CPU per op (129-149 against 189-227 ms, two runs
+  each), but whether it served fewer ops at a higher p50 varied from run
+  to run. The test suite, one long-lived JVM, ran 22% longer (548 -> 671
+  s). A
+  long-lived caller restores C2 with
+  ``get_spark(extra_conf={"spark.driver.defaultJavaOptions": ""})``.
+  Executor JVMs of a real cluster are not configured here.
+- PySpark's call-site capture is off
+  (`spark.python.sql.dataFrameDebugging.enabled=false`). With it on, every
+  Column function makes about 8 more py4j calls to record where it was
+  called from, which is about half of the driver-side build of an ACI query.
+  PySpark reads the conf once per process from the first active session, so
+  it is set in the builder. Error messages lose the Python call site of the
+  failing expression, not the error itself.
+- AQE on (runtime coalesce + skew-join splitting), so one plan serves the
+  test fixtures and a production-sized source without hand-tuned shuffle
+  partition counts.
 - Broadcast threshold raised: every dimension in both the ACI model (clubs,
   regions, roles, taxonomy) and the TPC-H test star (region, nation, supplier,
   part) is tiny relative to the fact tables; broadcast-hash-join avoids
-  shuffling the 100 TB side entirely.
+  shuffling the large side.
 - UTC session timezone so date semantics match the DuckDB oracle and are
   cluster-location-independent.
 - Arrow enabled: any pandas_udf / toPandas path moves columnar batches, not
@@ -31,11 +64,13 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with scale-conscious defaults.
+    """Build (or fetch) a SparkSession with the module's defaults.
 
     In tests/bench this is ``local[$SPARK_GRAFT_CPUS]``; on a real cluster the
     same conf block applies unchanged — nothing here is local-mode-specific
-    except the master fallback.
+    except the master fallback. ``extra_conf`` is applied last and overrides
+    any default. The JVM options take effect only when this call launches the
+    JVM (the first session of the process).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -76,6 +111,11 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"))
         .config("spark.ui.enabled", "false")
+        # one-shot driver: C1 only, and no Python call-site capture (module
+        # docstring)
+        .config("spark.driver.defaultJavaOptions",
+                "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -568,6 +568,16 @@ def funnel_stream(events: DataFrame) -> DataFrame:
     )
 
 
+def _release_checkpoints(*frames: DataFrame | None) -> None:
+    """Drop the blocks of `localCheckpoint`ed frames now. Spark otherwise
+    frees them only when the JVM collects the frame, and for state a
+    `foreachBatch` function captured that can be minutes after the stream
+    ended, in the middle of unrelated work."""
+    for df in frames:
+        if df is not None:
+            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def funnel_foreach_batch(
     events: DataFrame,
     spark: SparkSession,
@@ -634,9 +644,9 @@ def funnel_foreach_batch(
         ev = batch_df.select("user_id", "ts", "event_type").filter(
             F.col("event_type").isin(*steps)
         )
-        prev_state = state["df"]
-        if state["pending"] is not None:
-            ev = ev.unionByName(state["pending"])
+        prev_state, prev_pending = state["df"], state["pending"]
+        if prev_pending is not None:
+            ev = ev.unionByName(prev_pending)
         if prev_state is not None:
             for s in steps:
                 ev = ev.unionByName(
@@ -647,6 +657,7 @@ def funnel_foreach_batch(
                     )
                 )
         ev = ev.localCheckpoint(eager=True)  # scanned once per step + once for pending
+        _release_checkpoints(prev_state, prev_pending)
         chain = funnel_steps(ev, steps).localCheckpoint(eager=True)
         # retain candidates: step-k events strictly below the user's slot k
         # (or with slot k still NULL / user absent from the chain) — exactly
@@ -686,6 +697,7 @@ def funnel_foreach_batch(
                 pending = pending.filter(F.col("ts") >= F.lit(horizon))
         state["df"] = chain
         state["pending"] = pending.localCheckpoint(eager=True)
+        _release_checkpoints(ev)
 
     import tempfile
 
@@ -713,15 +725,20 @@ def funnel_foreach_batch(
                 # run_stream_to_table's finally block).
                 spark.conf.unset("spark.sql.shuffle.partitions")
 
+    chain, pending, max_ts = state["df"], state["pending"], state["max_ts"]
+    # the JVM holds `merge`, and so `state`, until it collects the query
+    state.clear()
     if state_out is not None:
         # observability hook (used by the bounded-state tests): final
         # retained-candidate set and event-time high-water mark
-        state_out["pending"] = state["pending"]
-        state_out["max_ts"] = state["max_ts"]
-    if state["df"] is None:  # no batch ever fired (empty landing dir)
+        state_out["pending"] = pending
+        state_out["max_ts"] = max_ts
+    else:
+        _release_checkpoints(pending)
+    if chain is None:  # no batch ever fired (empty landing dir)
         schema = ", ".join(["user_id long"] + [f"t_{s} timestamp" for s in steps])
         return spark.createDataFrame([], schema + ", stage_reached int")
-    return state["df"]
+    return chain
 
 
 def reconcile_funnel_snapshots(snapshots: DataFrame) -> DataFrame:
@@ -835,11 +852,10 @@ def _file_drop_index_stream(
         if batch_df.isEmpty():
             return
         delta = delta_fn(batch_df)
-        if state["index"] is None:
-            merged = delta
-        else:
-            merged = merge_fn(state["index"], delta)
+        prev = state["index"]
+        merged = delta if prev is None else merge_fn(prev, delta)
         state["index"] = merged.localCheckpoint(eager=True)
+        _release_checkpoints(prev)
         state["batches"] += 1
 
     ckpt = f"{stage}_ckpt_{uuid.uuid4().hex}"
@@ -856,15 +872,19 @@ def _file_drop_index_stream(
         # one-shot stream checkpoint is scratch; the staged corpus copy is
         # deterministic and kept for reuse (see the staging guard above)
         shutil.rmtree(ckpt, ignore_errors=True)
+    index, batches = state["index"], state["batches"]
+    # the JVM holds `upsert`, and so `state`, until it collects the query
+    state.clear()
     if batch_counter is not None:
-        batch_counter["batches"] = state["batches"]
-    if state["batches"] < 2:
+        batch_counter["batches"] = batches
+    if batches < 2:
+        _release_checkpoints(index)
         raise RuntimeError(
-            f"{stage_key} index stream ran in {state['batches']} "
+            f"{stage_key} index stream ran in {batches} "
             "micro-batch(es) — the incremental merge path was not "
             "exercised; check the landing dir produced multiple files"
         )
-    return state["index"]
+    return index
 
 
 def gram_index_stream(

@@ -13,6 +13,8 @@ from __future__ import annotations
 import glob
 import json
 import os
+import subprocess
+import sys
 
 from aci_export_spark import harness
 
@@ -143,6 +145,32 @@ def test_bench_order_bills_artifact_producers_first():
         if p in pos and c in pos and pos[p] > pos[c]
     ]
     assert not bad, f"consumers billed before their producers: {bad}"
+
+
+def _bench_order_in_fresh_process(*first_imports: str) -> list[str]:
+    """`_bench_ordered_names()` in a new interpreter that imports
+    `first_imports` before the harness."""
+    script = "; ".join(
+        ["import importlib, json"]
+        + [f"importlib.import_module({m!r})" for m in first_imports]
+        + ["from aci_export_spark import harness",
+           "print(json.dumps(harness._bench_ordered_names()))"]
+    )
+    done = subprocess.run([sys.executable, "-c", script], cwd=_ROOT,
+                          capture_output=True, text=True, timeout=300)
+    assert done.returncode == 0, done.stderr[-2000:]
+    return json.loads(done.stdout.strip().splitlines()[-1])
+
+
+def test_bench_order_does_not_depend_on_import_order():
+    """A process that imports harness_analytics before harness_llm (as a
+    test of the analytics operators does) registers the fuzzy-ER producer
+    after its consumer; the bench order must still be the default one."""
+    default = _bench_order_in_fresh_process()
+    analytics_first = _bench_order_in_fresh_process(
+        "aci_export_spark.harness_analytics", "aci_export_spark.harness_llm"
+    )
+    assert analytics_first == default
 
 
 def test_driver_window_bills_artifact_producers_first():

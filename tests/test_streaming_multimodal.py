@@ -534,6 +534,31 @@ def test_funnel_foreach_batch_multi_batch_merge(spark, tmp_path):
     assert _rows(final, cols) == _rows(want, cols)
 
 
+def test_funnel_foreach_batch_leaves_only_its_result_checkpointed(spark, tmp_path):
+    """Each micro-batch checkpoints its merge inputs and state; the funnel
+    releases every one it superseded, so after a multi-batch run only the
+    returned chain stays. Left to the garbage collector, they were freed
+    minutes later, in the middle of unrelated work."""
+    from aci_export_spark.streaming.core import funnel_foreach_batch
+
+    ev = read_table(spark, SF_SMOKE, "events")
+    ids = [r[0] for r in ev.select("event_id").orderBy("event_id").collect()]
+    per = math.ceil(len(ids) / 3)
+    for i in range(3):
+        part = ev.filter(F.col("event_id").isin(ids[i * per:(i + 1) * per]))
+        part.coalesce(1).write.parquet(str(tmp_path / f"c{i}"))
+    stream = (
+        spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(tmp_path / "c*"))
+    )
+    held = spark.sparkContext._jsc.getPersistentRDDs
+    before = held().size()
+    final = funnel_foreach_batch(stream, spark)
+    assert held().size() <= before + 1
+    assert final.count() > 0
+
+
 def test_stream_into_mirror_resumes_from_checkpoint(spark, tmp_path):
     """The exactly-once contract the foreachBatch mirror actually relies
     on: resuming with the SAME checkpoint after new files land processes
